@@ -32,13 +32,6 @@ package object functions {
       lit(0.0),
       (acc, v) => acc + v)
 
-  /** Portable HOF dot product. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, v) => acc + v)
-
   /** L2 norm of an array column. */
   def vec_norm(a: Column): Column = sqrt(vec_dot(a, a))
 

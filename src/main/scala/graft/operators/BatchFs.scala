@@ -2,14 +2,17 @@ package graft.operators
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-/** The file half of the idempotent batch-append protocol, shared by
-  * every batch-keyed sink ([[IvfIndex.appendBatch]] and
-  * [[TextSearch.appendTermBatch]]): a staged partitioned parquet write
-  * is committed into a live partitioned directory by MOVING each data
-  * file in under a `b<tag>-` prefix, after first deleting any files of
-  * that prefix left by a crashed earlier attempt. On a local
-  * filesystem the move is a rename; on an object store the same
-  * protocol runs against a manifest.
+/** The one idempotent batch-append commit path of this engine's
+  * additive logs (IVF postings, term postings, MinHash bands, LM and
+  * NB counts, span windows, PCA moments, edge and adjacency logs,
+  * scorecard mins). Every `appendBatch`-style sink calls
+  * [[BatchFs.appendOnce]]: the sink only stages its batch's files, and
+  * `appendOnce` owns the marker check, the single-writer lease, the
+  * move of the staged data files into the live directories under a
+  * `b<tag>-` prefix (after deleting any files of that prefix left by a
+  * crashed earlier attempt), the staging cleanup and the commit
+  * marker. All file motion is `java.nio.file` on a local filesystem;
+  * the move is a rename.
   *
   * Directory streams are eagerly listed and CLOSED — these sinks live
   * in long-running streaming jobs, and an unclosed Files.list holds a
@@ -23,13 +26,17 @@ private[graft] object BatchFs {
     finally s.close()
   }
 
+  /** The directories holding a log's data files: the partition dirs
+    * whose names start with `partPrefix`, or `root` itself for a flat
+    * log (empty prefix). */
   private def partitionDirs(root: Path, partPrefix: String): List[Path] =
-    children(root).filter(p => Files.isDirectory(p) &&
+    if (partPrefix.isEmpty) List(root)
+    else children(root).filter(p => Files.isDirectory(p) &&
       p.getFileName.toString.startsWith(partPrefix))
 
-  /** Step 3a: clear `b<tag>-*` files from a crashed prior commit
-    * attempt out of the live partition directories. */
-  def clearBatch(liveRoot: Path, partPrefix: String, tag: String): Unit =
+  /** Clear `b<tag>-*` files from a crashed prior commit attempt out of
+    * the live partition directories. */
+  private def clearBatch(liveRoot: Path, partPrefix: String, tag: String): Unit =
     if (Files.exists(liveRoot)) {
       partitionDirs(liveRoot, partPrefix).foreach { dir =>
         children(dir)
@@ -38,12 +45,12 @@ private[graft] object BatchFs {
       }
     }
 
-  /** Step 3b: move staged parquet data files into the live partition
+  /** Move staged parquet data files into the matching live partition
     * directories under the batch prefix. */
-  def commitStaged(stagingRoot: Path, liveRoot: Path, partPrefix: String,
-                   tag: String): Unit =
+  private def commitStaged(stagingRoot: Path, liveRoot: Path, partPrefix: String,
+                           tag: String): Unit =
     partitionDirs(stagingRoot, partPrefix).foreach { stagedDir =>
-      val dst = liveRoot.resolve(stagedDir.getFileName)
+      val dst = liveRoot.resolve(stagingRoot.relativize(stagedDir))
       Files.createDirectories(dst)
       children(stagedDir)
         .filter(_.getFileName.toString.endsWith(".parquet"))
@@ -53,7 +60,54 @@ private[graft] object BatchFs {
         }
     }
 
-  /** Step 4: the commit marker, written LAST. */
+  /** One additive log of a batch: live data under `<dir>/<name>`, in
+    * partition dirs named `<partPrefix>…` (`list_id=`, `bucket=`), or
+    * flat in `<dir>/<name>` when `partPrefix` is empty. */
+  final case class Log(name: String, partPrefix: String)
+
+  /** Commit one batch into the logs under `dir` exactly once:
+    *
+    *  1. a committed marker (`_committed/v2/<tag>`) makes a replay a
+    *     no-op: `stage` is not called and the result is 0;
+    *  2. under the `scope` lease, `stage` writes each log's batch files
+    *     to `<stagingRoot>/<log name>` (`mode=overwrite`, partitioned
+    *     like the live log) and returns the marker count. A log it
+    *     leaves unwritten — an empty wave — commits nothing;
+    *  3. fence; per log, delete `b<tag>-*` files of a crashed earlier
+    *     attempt from the live dirs, then move the staged data files in
+    *     under that prefix;
+    *  4. delete the staging root, fence, and write the marker LAST with
+    *     the count. Staging goes first: a crash between the two only
+    *     replays steps 2–3, whereas the reverse order would orphan the
+    *     staging dir behind a marker that short-circuits every replay.
+    *
+    * A crash (or a lost lease) anywhere before the marker leaves no
+    * marker, and the replay repairs and redoes steps 2–4. Returns the
+    * count `stage` returned (0 for a replay). */
+  def appendOnce(dir: String, scope: String, batchId: Long, namespace: String,
+                 logs: Seq[Log])(stage: Path => Long): Long = {
+    val marker = markerFor(dir, batchId, namespace)
+    if (Files.exists(marker)) return 0L
+    val tag = batchTag(batchId, namespace)
+    val staging = Paths.get(s"$dir/_staging/$scope-batch-$tag")
+    withLease(dir, scope) { fence =>
+      deleteRecursively(staging) // a crashed attempt's leftovers
+      val n = stage(staging)
+      fence() // abort BEFORE touching the live dirs if the lease is gone
+      logs.foreach { log =>
+        val live = Paths.get(dir, log.name)
+        val staged = staging.resolve(log.name)
+        clearBatch(live, log.partPrefix, tag)
+        if (Files.exists(staged)) commitStaged(staged, live, log.partPrefix, tag)
+      }
+      deleteRecursively(staging)
+      fence()
+      writeMarker(marker, n.toString)
+      n
+    }
+  }
+
+  /** A commit marker (or sentinel) with its payload. */
   def writeMarker(marker: Path, payload: String): Unit = {
     Files.createDirectories(marker.getParent)
     Files.write(marker, payload.getBytes("UTF-8"))

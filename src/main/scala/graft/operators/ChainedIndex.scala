@@ -296,38 +296,18 @@ object ChainedIndex {
     * rows appended (0 for a replayed batch). */
   def appendBatch(spark: SparkSession, dir: String, rows: DataFrame,
                   idCol: String, embCol: String, batchId: Long,
-                  namespace: String = ""): Long = {
-    import java.nio.file.{Files, Paths}
-    val tag = BatchFs.batchTag(batchId, namespace)
-    val marker = BatchFs.markerFor(dir, batchId, namespace)
-    val staging = s"$dir/_staging/batch-$tag"
-    if (Files.exists(marker)) {
-      // a crash between writeMarker and the staging delete below leaves
-      // the staged dir orphaned forever (the marker short-circuits every
-      // replay); sweep it here so the replay is also the janitor
-      BatchFs.deleteRecursively(Paths.get(staging))
-      return 0L
-    }
-    BatchFs.withLease(dir, "codes") { fence =>
+                  namespace: String = ""): Long =
+    BatchFs.appendOnce(dir, "codes", batchId, namespace,
+        Seq(BatchFs.Log("codes", "list_id="))) { staging =>
       val p = load(spark, dir)
       val coded = encodeWith(p, rows, idCol, embCol)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val n = coded.count()
       coded.repartition(col("list_id"))
-        .write.mode("overwrite").partitionBy("list_id").parquet(staging)
+        .write.mode("overwrite").partitionBy("list_id").parquet(s"$staging/codes")
       coded.unpersist(blocking = false)
-      val codesRoot = Paths.get(s"$dir/codes")
-      fence() // abort BEFORE touching the live dir if the lease is gone
-      BatchFs.clearBatch(codesRoot, "list_id=", tag)
-      BatchFs.commitStaged(Paths.get(staging), codesRoot, "list_id=", tag)
-      // delete-before-marker: a crash between the two replays steps 2-3
-      // cleanly; the reverse order would orphan the staging dir forever
-      BatchFs.deleteRecursively(Paths.get(staging))
-      fence()
-      BatchFs.writeMarker(marker, n.toString)
       n
     }
-  }
 
   /** (list_id, id, codes BINARY) for `rows` under a loaded artifact's
     * frozen models — the add-path encoder, and the audit's

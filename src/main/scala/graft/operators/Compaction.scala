@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions.col
   *  - only committed data is folded: a `b<tag>-` file whose marker is
   *    absent belongs to a crashed, not-yet-replayed batch — folding it
   *    would double its rows when the source replays. Such files are
-  *    carried over untouched, so the replay's clearBatch+commit cycle
-  *    still finds them under their batch prefix;
+  *    carried over untouched, so the replay's clear-and-commit cycle
+  *    ([[BatchFs.appendOnce]]) still finds them under their batch prefix;
   *  - markers are preserved: a batch replayed AFTER compaction still
   *    sees its marker and no-ops (its rows now live in the compacted
   *    file);
@@ -260,12 +260,4 @@ object Compaction {
     Seq("uni", "bi", "tri").map(sub =>
       compactPartitions(spark, s"$dir/$sub", dir, "bucket"))
       .reduce((x, y) => (x._1 + y._1, x._2 + y._2))
-
-  /** Compact a persisted IVF index's postings (inverted lists). */
-  def compactIvfIndex(spark: SparkSession, dir: String): (Int, Int) =
-    compactPartitions(spark, s"$dir/postings", dir, "list_id")
-
-  /** Compact a span-dedup window-count log. */
-  def compactSpanIndex(spark: SparkSession, dir: String): (Int, Int) =
-    compactPartitions(spark, s"$dir/counts", dir, "bucket")
 }

@@ -89,8 +89,8 @@ object Dedup {
   /** 3-token shingles as ROWS (id, s): posexplode + window leads, all
     * codegen'd. The previous `transform(sequence, i -> slice…)`
     * formulation is an interpreted HOF (CodegenFallback) and measured
-    * 5× slower on the same 260k shingles at sf0.1 (8.8 s vs 1.7 s,
-    * DevProbe minhash) — the same trap as the round-3 740 s MinHash
+    * 5× slower on the same 260k shingles at sf0.1 (8.8 s vs 1.7 s for
+    * the signature stage) — the same trap as the round-3 740 s MinHash
     * postmortem, in milder form. Docs under 3 tokens contribute their
     * whole normalized text as the single shingle (unchanged
     * semantics; identical row multiset, order immaterial under the

@@ -787,18 +787,14 @@ object GraphAnn {
   def appendGraphBatch(spark: SparkSession, dir: String, newRows: DataFrame,
                        emb: DataFrame, k: Int = 10, ef: Int = 32,
                        batchId: Long, namespace: String = "",
-                       seeds: Option[Seq[Long]] = None): Long = {
-    import java.nio.file.{Files, Paths}
-    val tag = BatchFs.batchTag(batchId, namespace)
-    val marker = BatchFs.markerFor(dir, batchId, namespace)
-    if (Files.exists(marker)) return 0L
-    BatchFs.withLease(dir, "adjacency") { fence =>
+                       seeds: Option[Seq[Long]] = None): Long =
+    BatchFs.appendOnce(dir, "adjacency", batchId, namespace,
+        Seq(BatchFs.Log("adjacency", "bucket="))) { staging =>
       val idx = loadGraph(spark, dir)
       // the wave IS the query batch: bounded by the micro-batch size
       val queries = newRows.select(col("vec_id"), col("embedding")).collect()
         .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toSeq
-      if (queries.isEmpty) { fence(); BatchFs.writeMarker(marker, "0"); 0L }
-      else {
+      if (queries.nonEmpty) {
         // seed override for concentrated geometry: the wave's k-NN
         // lists are only as good as the beams' entry coverage (pass
         // spreadSeeds sized per the scaladoc there); hash seeds remain
@@ -819,22 +815,11 @@ object GraphAnn {
         import spark.implicits._
         val edges = (fwd ++ fwd.map { case (s, d, x) => (d, s, x) }).toSeq
           .toDF("src", "dst", "dist")
-        val staging = s"$dir/_staging/batch-$tag"
         bucketedAdjacency(edges, idx.nBuckets).repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-        val adjRoot = Paths.get(s"$dir/adjacency")
-        fence() // abort BEFORE touching the live dir if the lease is gone
-        BatchFs.clearBatch(adjRoot, "bucket=", tag)
-        BatchFs.commitStaged(Paths.get(staging), adjRoot, "bucket=", tag)
-        // delete-before-marker: a crash between the two replays cleanly;
-        // the reverse order would orphan the staging dir forever
-        BatchFs.deleteRecursively(Paths.get(staging))
-        fence()
-        BatchFs.writeMarker(marker, queries.size.toString)
-        queries.size.toLong
+          .write.mode("overwrite").partitionBy("bucket").parquet(s"$staging/adjacency")
       }
+      queries.size.toLong
     }
-  }
 
   /** The retrain analogue: NN-descent rounds initialized from the
     * CURRENT adjacency (original + appended waves) over the full

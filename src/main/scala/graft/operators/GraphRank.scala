@@ -223,9 +223,8 @@ object GraphRank {
                        batchId: Long, namespace: String = "",
                        minJaccard: Double = 0.8,
                        precomputedSigs: Option[DataFrame] = None): Long = {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     val edgeNs = if (namespace.isEmpty) "edges" else s"$namespace-edges"
-    val tag = BatchFs.batchTag(batchId, edgeNs)
     val marker = BatchFs.markerFor(dir, batchId, edgeNs)
     val idxMarker = BatchFs.markerFor(dir, batchId, namespace)
     if (Files.exists(marker) && Files.exists(idxMarker)) return 0L
@@ -268,21 +267,12 @@ object GraphRank {
         () => edgeRows match {
           case None => 0L
           case Some((rows, n)) =>
-            try BatchFs.withLease(dir, "edges") { fence =>
-              if (n == 0L) { fence(); BatchFs.writeMarker(marker, "0"); 0L }
-              else {
-                val staging = s"$dir/_staging/edges-batch-$tag"
+            try BatchFs.appendOnce(dir, "edges", batchId, edgeNs,
+                Seq(BatchFs.Log("edges", "bucket="))) { staging =>
+              if (n > 0L)
                 rows.repartition(col("bucket"))
-                  .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-                val live = Paths.get(s"$dir/edges")
-                fence() // abort BEFORE touching the live dir if the lease is gone
-                BatchFs.clearBatch(live, "bucket=", tag)
-                BatchFs.commitStaged(Paths.get(staging), live, "bucket=", tag)
-                BatchFs.deleteRecursively(Paths.get(staging))
-                fence()
-                BatchFs.writeMarker(marker, n.toString)
-                n
-              }
+                  .write.mode("overwrite").partitionBy("bucket").parquet(s"$staging/edges")
+              n
             } finally rows.unpersist(blocking = false)
         },
         () => MinhashIndex.appendBatchFromSigs(spark, dir, sigs, batchId, namespace)

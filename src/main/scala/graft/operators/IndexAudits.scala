@@ -22,8 +22,9 @@ import graft.functions.{cosine_sim, l2sq}
   * production search path stays untouched underneath.
   *
   * Recall floors are set from measured values at BOTH gate scales
-  * (sf0.01 / sf0.1; see AuditProbe) with ≥ 1.4× margin; every other
-  * flag is deterministic by construction, not probabilistic.
+  * (sf0.01 / sf0.1; each audit's doc gives its figures) with ≥ 1.4×
+  * margin; every other flag is deterministic by construction, not
+  * probabilistic.
   *
   * Scale posture: audits run the exact twin only over driver-scale
   * vector tables (the embeddings table is the small side by design);
@@ -263,7 +264,6 @@ object IndexAudits {
 
   def f16Audit(spark: SparkSession, sfDir: String,
                k: Int = 10, minHits: Int = 8): DataFrame = {
-    import graft.functions.{dequantize_f16, quantize_f16}
     val emb = embeddings(spark, sfDir)
     val q = queryVec(spark, sfDir, 0L)
     val res = Quantization.knnF16(spark, sfDir, 0L, k) // (vec_id, dist)
@@ -651,7 +651,7 @@ object IndexAudits {
     * `knn_pca_rerank`): exactly k hits, never the query row, result
     * distances recompute bit-identically from the raw vectors (the
     * re-rank really is exact full-dim L2), and recall@k against the
-    * exact global scan clears the measured floor (AuditProbe: 1.0 at
+    * exact global scan clears the measured floor (measured: 1.0 at
     * sf0.01, 0.9 at sf0.1 for r=200, d=24; floor 6/10 ≈ 1.4× margin —
     * the test embeddings are near-isotropic, so PCA keeps 24 of 64
     * dims; variance-concentrated real embeddings compress far
@@ -765,7 +765,7 @@ object IndexAudits {
     * kernel (later picks depend on the greedy's running selection,
     * which the exact-equality test against [[Mmr.mmrRerank]] at
     * nprobe = nlist pins instead); and the selection's overlap with
-    * the exact-shortlist MMR clears the measured floor (AuditProbe:
+    * the exact-shortlist MMR clears the measured floor (measured:
     * 7/8/9 of 10 at sf0.001/sf0.01/sf0.1 at the default nprobe 3 of
     * 4; floor 5, 1.4x margin). */
   def mmrIvfAudit(spark: SparkSession, sfDir: String, k: Int = 10,

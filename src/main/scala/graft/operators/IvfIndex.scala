@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
+import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.linalg.{Vector => MlVector}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -406,19 +406,9 @@ object IvfIndex {
   /** Idempotent per-batch append — the sink for at-least-once replay
     * (`foreachBatch` re-delivers a batch whenever a crash lands between
     * the write and the offset commit; plain [[append]] would then
-    * duplicate rows). Stage → prefixed move → marker commit:
-    *
-    *  1. a committed marker (`_committed/v2/<batchId>`) short-circuits a
-    *     replay of a fully-committed batch to a no-op;
-    *  2. the batch is written to a per-batch staging directory with
-    *     `mode=overwrite` (re-staging after a crash is itself
-    *     idempotent);
-    *  3. any `b<batchId>-*` files from a crashed earlier commit attempt
-    *     are deleted from the postings directories, then the staged
-    *     files are MOVED in under that prefix (local-fs rename; on an
-    *     object store the same protocol runs against a manifest);
-    *  4. the marker is written last — a crash anywhere before it
-    *     replays into steps 2–3, which repair and redo cleanly.
+    * duplicate rows). The batch's postings are staged and committed
+    * through [[BatchFs.appendOnce]]: a replay of a committed batch is a
+    * no-op, and a crash before its marker replays into a clean redo.
     *
     * `namespace` scopes the batchId sequence to one writer (batch ids
     * restart at 0 per checkpoint, so two jobs appending to one index
@@ -426,34 +416,18 @@ object IvfIndex {
     * replayed committed batch). */
   def appendBatch(spark: SparkSession, dir: String, rows: DataFrame,
                   idCol: String, embCol: String, batchId: Long,
-                  namespace: String = ""): Long = {
-    import java.nio.file.{Files, Paths}
-    val tag = BatchFs.batchTag(batchId, namespace)
-    val marker = BatchFs.markerFor(dir, batchId, namespace)
-    if (Files.exists(marker)) return 0L
-    BatchFs.withLease(dir, "postings") { fence =>
-      val staging = s"$dir/_staging/batch-$tag"
+                  namespace: String = ""): Long =
+    BatchFs.appendOnce(dir, "postings", batchId, namespace,
+        Seq(BatchFs.Log("postings", "list_id="))) { staging =>
       val index = load(spark, dir)
       val assigned = assignLists(index, rows, idCol, embCol)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val n = assigned.count()
       assigned.repartition(col("list_id"))
-        .write.mode("overwrite").partitionBy("list_id").parquet(staging)
+        .write.mode("overwrite").partitionBy("list_id").parquet(s"$staging/postings")
       assigned.unpersist(blocking = false)
-      val postingsRoot = Paths.get(s"$dir/postings")
-      fence() // abort BEFORE touching the live dir if the lease is gone
-      BatchFs.clearBatch(postingsRoot, "list_id=", tag)
-      BatchFs.commitStaged(Paths.get(staging), postingsRoot, "list_id=", tag)
-      // staging cleanup BEFORE the marker: commitStaged already moved the
-      // data files out, and a crash here just replays steps 2-3 — whereas
-      // marker-then-delete leaves a permanently orphaned staging dir if
-      // the crash lands between them (the marker short-circuits replays)
-      deleteRecursively(staging)
-      fence()
-      BatchFs.writeMarker(marker, n.toString)
       n
     }
-  }
 
   /** Per-list posting counts plus each list's share of the total —
     * the staleness signal for scheduling re-training (appends against
@@ -555,7 +529,7 @@ object IvfIndex {
 
   /** Move marker-less batch files from the superseded generation's
     * postings into the new one's, same list_id dirs — their replay's
-    * clearBatch + commit cycle must find them under their batch
+    * clear-and-commit cycle must find them under their batch
     * prefix. (Their list assignment is stale w.r.t. the new centroids,
     * exactly as uncompacted uncommitted data was stale pre-retrain;
     * the replay reassigns against the promoted index.) */
@@ -574,7 +548,7 @@ object IvfIndex {
   def maintainIndex(spark: SparkSession, dir: String,
                     maxShareFactor: Double = 3.0, seed: Long = 42L,
                     maxIter: Int = 20): MaintenanceReport = {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Paths
     recoverPromotion(dir) // a crashed prior promotion first
     val index = load(spark, dir)
     val nlist = index.centroidArrays.length
@@ -588,7 +562,7 @@ object IvfIndex {
     BatchFs.deleteRecursively(Paths.get(staging)) // crashed prior attempt
     // retrain from COMMITTED postings only: folding a marker-less
     // crashed batch's rows into the new generation would double them
-    // when the batch replays (its clearBatch would find no b<tag>-
+    // when the batch replays (its commit would find no b<tag>-
     // files to remove) — those files are carried over instead
     val (committed, _) = classifyPostings(dir)
     if (committed.isEmpty) // nothing durable to train on — stand pat

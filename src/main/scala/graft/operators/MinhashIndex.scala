@@ -108,44 +108,35 @@ object MinhashIndex {
     * committed batch is a no-op; a crash mid-commit is repaired by the
     * replay. Returns documents appended (0 for a replay). */
   def appendBatch(spark: SparkSession, dir: String, newDocs: DataFrame,
-                  batchId: Long, namespace: String = ""): Long = {
-    if (java.nio.file.Files.exists(BatchFs.markerFor(dir, batchId, namespace)))
-      return 0L
-    val sigs = Dedup.minhashSignaturesCorpus(newDocs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try appendBatchFromSigs(spark, dir, sigs, batchId, namespace)
-    finally sigs.unpersist(blocking = false)
-  }
+                  batchId: Long, namespace: String = ""): Long =
+    BatchFs.appendOnce(dir, "minhash", batchId, namespace, BatchLogs) { staging =>
+      val sigs = Dedup.minhashSignaturesCorpus(newDocs)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try stageSigs(spark, dir, sigs, staging)
+      finally sigs.unpersist(blocking = false)
+    }
 
   /** [[appendBatch]] over an already-persisted signature frame (caller
     * owns the persist — the [[saveFromSigs]] discipline). */
   private[operators] def appendBatchFromSigs(spark: SparkSession, dir: String,
                                              sigs: DataFrame, batchId: Long,
-                                             namespace: String = ""): Long = {
-    import java.nio.file.Paths
-    val tag = BatchFs.batchTag(batchId, namespace)
-    val marker = BatchFs.markerFor(dir, batchId, namespace)
-    if (java.nio.file.Files.exists(marker)) return 0L
-    BatchFs.withLease(dir, "minhash") { fence =>
-      val nBuckets = nBucketsOf(spark, dir)
-      val n = sigs.count()
-      if (n == 0L) { fence(); BatchFs.writeMarker(marker, "0"); 0L }
-      else {
-        Seq(("bands", bandRows(sigs, nBuckets)), ("docs", docRows(sigs, nBuckets)))
-          .foreach { case (name, df) =>
-            val staging = s"$dir/_staging/$name-batch-$tag"
-            writeBucketed(df, staging, "overwrite")
-            val live = Paths.get(s"$dir/$name")
-            fence() // abort BEFORE touching the live dir if the lease is gone
-            BatchFs.clearBatch(live, "bucket=", tag)
-            BatchFs.commitStaged(Paths.get(staging), live, "bucket=", tag)
-            BatchFs.deleteRecursively(Paths.get(staging))
-          }
-        fence()
-        BatchFs.writeMarker(marker, n.toString)
-        n
-      }
+                                             namespace: String = ""): Long =
+    BatchFs.appendOnce(dir, "minhash", batchId, namespace, BatchLogs)(
+      stageSigs(spark, dir, sigs, _))
+
+  private val BatchLogs = Seq(BatchFs.Log("bands", "bucket="), BatchFs.Log("docs", "bucket="))
+
+  /** Stage a wave's band and doc rows under `staging`; returns the
+    * wave's document count (an empty wave stages nothing). */
+  private def stageSigs(spark: SparkSession, dir: String, sigs: DataFrame,
+                        staging: java.nio.file.Path): Long = {
+    val nBuckets = nBucketsOf(spark, dir)
+    val n = sigs.count()
+    if (n > 0L) {
+      writeBucketed(bandRows(sigs, nBuckets), s"$staging/bands", "overwrite")
+      writeBucketed(docRows(sigs, nBuckets), s"$staging/docs", "overwrite")
     }
+    n
   }
 
   /** Probe a wave against the index WITHOUT touching its stored

@@ -169,34 +169,21 @@ object NbClassifier {
     * labeled-doc count (0 for a replay). */
   def appendModelBatch(spark: SparkSession, dir: String,
                        labeledWave: DataFrame, batchId: Long,
-                       namespace: String = ""): Long = {
-    import java.nio.file.{Files, Paths}
-    val tag = BatchFs.batchTag(batchId, namespace)
-    val marker = BatchFs.markerFor(dir, batchId, namespace)
-    if (Files.exists(marker)) return 0L
-    val nBuckets = spark.read.parquet(s"$dir/meta").head.getInt(0)
-    val cached = labeledWave
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try BatchFs.withLease(dir, "stats") { fence =>
-      val n = cached.count()
-      if (n == 0L) { fence(); BatchFs.writeMarker(marker, "0"); 0L }
-      else {
-        val (terms, docs) = stats(cached)
-        val staging = s"$dir/_staging/stats-batch-$tag"
-        writeStats(terms, docs, staging, nBuckets, "overwrite")
-        fence() // abort BEFORE touching the live dir if the lease is gone
-        Seq("terms", "docs").foreach { sub =>
-          val live = Paths.get(s"$dir/$sub")
-          BatchFs.clearBatch(live, "bucket=", tag)
-          BatchFs.commitStaged(Paths.get(s"$staging/$sub"), live, "bucket=", tag)
+                       namespace: String = ""): Long =
+    BatchFs.appendOnce(dir, "stats", batchId, namespace,
+        Seq(BatchFs.Log("terms", "bucket="), BatchFs.Log("docs", "bucket="))) { staging =>
+      val nBuckets = spark.read.parquet(s"$dir/meta").head.getInt(0)
+      val cached = labeledWave
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val n = cached.count()
+        if (n > 0L) {
+          val (terms, docs) = stats(cached)
+          writeStats(terms, docs, staging.toString, nBuckets, "overwrite")
         }
-        BatchFs.deleteRecursively(Paths.get(staging))
-        fence()
-        BatchFs.writeMarker(marker, n.toString)
         n
-      }
-    } finally cached.unpersist(blocking = false)
-  }
+      } finally cached.unpersist(blocking = false)
+    }
 
   /** Load the persisted model: per-key sums over the additive logs,
     * then the same weight/prior derivation as [[train]] — so scoring

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.sources.Ingest
@@ -227,39 +226,27 @@ object NgramLm {
     * committed batch is a no-op; a crash mid-commit is repaired by the
     * replay. Returns the wave's token count (0 for a replay). */
   def appendModelBatch(spark: SparkSession, dir: String, newDocs: DataFrame,
-                       batchId: Long, namespace: String = ""): Long = {
-    import java.nio.file.{Files, Paths}
-    val tag = BatchFs.batchTag(batchId, namespace)
-    val marker = BatchFs.markerFor(dir, batchId, namespace)
-    if (Files.exists(marker)) return 0L
-    val nBuckets = spark.read.parquet(s"$dir/meta").head.getInt(0)
-    // total head + three staged writes each scan the wave; cache it once
-    val cached = newDocs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try BatchFs.withLease(dir, "counts") { fence =>
-      val m = train(cached)
-      val waveTokens = {
-        val r = m.total.head
-        if (r.isNullAt(0)) 0L else r.getLong(0)
-      }
-      if (waveTokens == 0L) { fence(); BatchFs.writeMarker(marker, "0"); 0L }
-      else {
-        val parts = Seq(
-          ("uni", m.uni, "w", "c1"), ("bi", m.bi, "k", "c2"), ("tri", m.tri, "k", "c3"))
-        parts.foreach { case (name, df, key, cnt) =>
-          val staging = s"$dir/_staging/$name-batch-$tag"
-          writeCounts(df, key, cnt, staging, nBuckets, "overwrite")
-          val live = Paths.get(s"$dir/$name")
-          fence() // abort BEFORE touching the live dir if the lease is gone
-          BatchFs.clearBatch(live, "bucket=", tag)
-          BatchFs.commitStaged(Paths.get(staging), live, "bucket=", tag)
-          BatchFs.deleteRecursively(Paths.get(staging))
+                       batchId: Long, namespace: String = ""): Long =
+    BatchFs.appendOnce(dir, "counts", batchId, namespace,
+        Seq("uni", "bi", "tri").map(BatchFs.Log(_, "bucket="))) { staging =>
+      val nBuckets = spark.read.parquet(s"$dir/meta").head.getInt(0)
+      // total head + three staged writes each scan the wave; cache it once
+      val cached = newDocs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val m = train(cached)
+        val waveTokens = {
+          val r = m.total.head
+          if (r.isNullAt(0)) 0L else r.getLong(0)
         }
-        fence()
-        BatchFs.writeMarker(marker, waveTokens.toString)
+        if (waveTokens > 0L) {
+          writeCounts(m.uni, "w", "c1", s"$staging/uni", nBuckets, "overwrite")
+          writeCounts(m.bi, "k", "c2", s"$staging/bi", nBuckets, "overwrite")
+          writeCounts(m.tri, "k", "c3", s"$staging/tri", nBuckets, "overwrite")
+        }
         waveTokens
-      }
-    } finally cached.unpersist(blocking = false)
-  }
+      } finally cached.unpersist(blocking = false)
+    }
+
 
   /** Load the persisted model: per-key sums over the additive logs —
     * exactly what a fresh [[train]] over the union of all waves would

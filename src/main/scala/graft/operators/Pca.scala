@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import graft.Tables
 import graft.functions.{l2sq, mat_vec, CovMoments}
 
@@ -273,38 +272,17 @@ object Pca {
     * moment row, moves it in under the batch prefix, marker last.
     * Returns the wave's row count (0 for a replay or an empty wave). */
   def appendMomentsBatch(spark: SparkSession, dir: String, wave: DataFrame,
-                         batchId: Long, namespace: String = ""): Long = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tag = BatchFs.batchTag(batchId, namespace)
-    val marker = BatchFs.markerFor(dir, batchId, namespace)
-    if (Files.exists(marker)) return 0L
-    BatchFs.withLease(dir, "moments") { fence =>
+                         batchId: Long, namespace: String = ""): Long =
+    BatchFs.appendOnce(dir, "moments", batchId, namespace,
+        Seq(BatchFs.Log("moments", ""))) { staging =>
       val (n, sums, prods) = momentRow(spark, wave)
-      if (n == 0L) { fence(); BatchFs.writeMarker(marker, "0"); 0L }
-      else {
+      if (n > 0L) {
         import spark.implicits._
-        val staging = s"$dir/_staging/moments-batch-$tag"
         Seq((n, sums.toSeq, prods.toSeq)).toDF("n", "sums", "prods")
-          .coalesce(1).write.mode("overwrite").parquet(staging)
-        val live = Paths.get(s"$dir/moments")
-        Files.createDirectories(live)
-        fence() // abort BEFORE touching the live dir if the lease is gone
-        BatchFs.children(live)
-          .filter(_.getFileName.toString.startsWith(s"b$tag-"))
-          .foreach(Files.delete(_))
-        BatchFs.children(Paths.get(staging))
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .foreach { f =>
-            Files.move(f, live.resolve(s"b$tag-${f.getFileName}"),
-              StandardCopyOption.REPLACE_EXISTING)
-          }
-        BatchFs.deleteRecursively(Paths.get(staging))
-        fence()
-        BatchFs.writeMarker(marker, n.toString)
-        n
+          .coalesce(1).write.mode("overwrite").parquet(s"$staging/moments")
       }
+      n
     }
-  }
 
   /** Retrain from the log: sum the committed wave rows (one per wave,
     * driver-bounded by wave count) in DETERMINISTIC file-name order —

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.{cosine_sim, dequantize_f16, dot_i8, l2sq,
+import graft.functions.{dequantize_f16, dot_i8, l2sq,
   quant_scale, quantize_f16, quantize_i8}
 
 /** Int8-quantized similarity search over the `embeddings` table — the

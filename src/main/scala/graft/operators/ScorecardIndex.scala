@@ -169,7 +169,6 @@ object ScorecardIndex {
     * component had already committed). */
   def appendWaveBatch(spark: SparkSession, dir: String, wave: DataFrame,
                       batchId: Long, namespace: String = ""): Long = {
-    import java.nio.file.{Files, Paths}
     val lab = labeled(wave)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -191,20 +190,10 @@ object ScorecardIndex {
       SpanDedup.appendWindowIndexBatch(spark, s"$dir/spans", wave,
         batchId, namespace)
       // min-id log: same staged-commit protocol, marker under the root
-      val tag = BatchFs.batchTag(batchId, namespace)
-      val marker = BatchFs.markerFor(dir, batchId, namespace)
-      if (Files.exists(marker)) return 0L
-      BatchFs.withLease(dir, "mins") { fence =>
-        val staging = s"$dir/_staging/mins-batch-$tag"
+      BatchFs.appendOnce(dir, "mins", batchId, namespace,
+          Seq(BatchFs.Log("mins", "bucket="))) { staging =>
         minsDelta(wave, minsBucketsOf(spark, dir)).repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-        val live = Paths.get(s"$dir/mins")
-        fence() // abort BEFORE touching the live dir if the lease is gone
-        BatchFs.clearBatch(live, "bucket=", tag)
-        BatchFs.commitStaged(Paths.get(staging), live, "bucket=", tag)
-        BatchFs.deleteRecursively(Paths.get(staging))
-        fence()
-        BatchFs.writeMarker(marker, n.toString)
+          .write.mode("overwrite").partitionBy("bucket").parquet(s"$staging/mins")
         n
       }
     } finally lab.unpersist(blocking = false)

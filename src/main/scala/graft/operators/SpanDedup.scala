@@ -183,34 +183,23 @@ object SpanDedup {
     * last. Returns the wave's distinct-window count (0 for a replay). */
   def appendWindowIndexBatch(spark: SparkSession, dir: String,
                              newDocs: DataFrame, batchId: Long,
-                             namespace: String = ""): Long = {
-    import java.nio.file.{Files, Paths}
-    val tag = BatchFs.batchTag(batchId, namespace)
-    val marker = BatchFs.markerFor(dir, batchId, namespace)
-    if (Files.exists(marker)) return 0L
-    val (w, nBuckets) = loadMeta(spark, dir)
-    val counts = windowFrame(newDocs, w)
-      .groupBy(col("wtext")).agg(count(lit(1)).as("occ"))
-      .select(bucketOf(col("wtext"), nBuckets).as("bucket"), col("wtext"), col("occ"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try BatchFs.withLease(dir, "counts") { fence =>
-      val n = counts.count()
-      if (n == 0L) { fence(); BatchFs.writeMarker(marker, "0"); 0L }
-      else {
-        val staging = s"$dir/_staging/counts-batch-$tag"
-        counts.repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-        val live = Paths.get(s"$dir/counts")
-        fence() // abort BEFORE touching the live dir if the lease is gone
-        BatchFs.clearBatch(live, "bucket=", tag)
-        BatchFs.commitStaged(Paths.get(staging), live, "bucket=", tag)
-        BatchFs.deleteRecursively(Paths.get(staging))
-        fence()
-        BatchFs.writeMarker(marker, n.toString)
+                             namespace: String = ""): Long =
+    BatchFs.appendOnce(dir, "counts", batchId, namespace,
+        Seq(BatchFs.Log("counts", "bucket="))) { staging =>
+      val (w, nBuckets) = loadMeta(spark, dir)
+      val counts = windowFrame(newDocs, w)
+        .groupBy(col("wtext")).agg(count(lit(1)).as("occ"))
+        .select(bucketOf(col("wtext"), nBuckets).as("bucket"), col("wtext"), col("occ"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val n = counts.count()
+        if (n > 0L)
+          counts.repartition(col("bucket"))
+            .write.mode("overwrite").partitionBy("bucket").parquet(s"$staging/counts")
         n
-      }
-    } finally counts.unpersist(blocking = false)
-  }
+      } finally counts.unpersist(blocking = false)
+    }
+
 
   /** Per-document duplication summary for an INCOMING wave that is NOT
     * yet in the index: a window is duplicated iff its summed log count

@@ -293,38 +293,24 @@ object TextSearch {
     * Returns docs appended (0 for a replayed committed batch). */
   def appendTermBatch(spark: SparkSession, dir: String, docs: DataFrame,
                       batchId: Long, namespace: String = "",
-                      nBuckets: Long = -1L): Long = {
-    import java.nio.file.{Files, Paths}
-    val tag = BatchFs.batchTag(batchId, namespace)
-    val marker = BatchFs.markerFor(dir, batchId, namespace)
-    if (Files.exists(marker)) return 0L
-    val buckets =
-      if (nBuckets > 0) nBuckets
-      else loadTermIndex(spark, dir).stats
-        .select(col("n_buckets")).head().getLong(0)
-    val toks = tokenizedDocs(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try BatchFs.withLease(dir, "postings") { fence =>
-      val n = toks.count()
-      if (n == 0L) { fence(); BatchFs.writeMarker(marker, "0"); 0L }
-      else {
-        val staging = s"$dir/_staging/batch-$tag"
-        bucketedPostings(toks, buckets)
-          .repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-        val live = Paths.get(s"$dir/postings")
-        fence() // abort BEFORE touching the live dir if the lease is gone
-        BatchFs.clearBatch(live, "bucket=", tag)
-        BatchFs.commitStaged(Paths.get(staging), live, "bucket=", tag)
-        // delete-before-marker: a crash between the two replays steps 2-3
-        // cleanly; the reverse order would orphan the staging dir forever
-        BatchFs.deleteRecursively(Paths.get(staging))
-        fence()
-        BatchFs.writeMarker(marker, n.toString)
+                      nBuckets: Long = -1L): Long =
+    BatchFs.appendOnce(dir, "postings", batchId, namespace,
+        Seq(BatchFs.Log("postings", "bucket="))) { staging =>
+      val buckets =
+        if (nBuckets > 0) nBuckets
+        else loadTermIndex(spark, dir).stats
+          .select(col("n_buckets")).head().getLong(0)
+      val toks = tokenizedDocs(docs)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val n = toks.count()
+        if (n > 0L)
+          bucketedPostings(toks, buckets)
+            .repartition(col("bucket"))
+            .write.mode("overwrite").partitionBy("bucket").parquet(s"$staging/postings")
         n
-      }
-    } finally toks.unpersist(blocking = false)
-  }
+      } finally toks.unpersist(blocking = false)
+    }
 
   /** Recompute df and corpus stats FROM the live postings — the
     * term-index analogue of [[IvfIndex.retrain]], and the repair step

@@ -2,7 +2,6 @@ package graft
 package registry
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.operators._
 import OracleFragments._
 
 /** Structured Streaming surface (SURVEY §2.9): windowed aggregation, stream-stream joins, stateful sessions.

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -70,7 +70,7 @@ object StatefulSessions {
     val all = (open ++ events.map { case (us, c) => Sess(us, us, 1L, c) })
       .sortBy(s => (s.startUs, s.lastUs))
     all.foldLeft(List.empty[Sess]) {
-      case (acc @ (cur :: rest), next) if next.startUs < cur.lastUs + GapUs =>
+      case (cur :: rest, next) if next.startUs < cur.lastUs + GapUs =>
         Sess(cur.startUs, math.max(cur.lastUs, next.lastUs),
           cur.n + next.n, cur.cents + next.cents) :: rest
       case (acc, next) => next :: acc
@@ -118,10 +118,4 @@ object StatefulSessions {
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(handleGroup)
       .toDF()
   }
-
-  /** Driver-side oracle for the test: sessionize one user's sorted
-    * event times with the same strict-inside rule. */
-  private[streaming] def driverSessions(
-      rows: Seq[(Long, Double)]): List[Sess] =
-    merge(Nil, rows.sortBy(_._1).map { case (us, v) => (us, toCents(v)) }.toArray)
 }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 
 /** Dev-only forwarding shim (test sourceset since r16 — never in the
   * production jar): exposes package-private operator kernels
-  * to ad-hoc spark-shell probes (the DevProbe pattern without a JVM
-  * restart per experiment). Never referenced by any query path. */
+  * to ad-hoc spark-shell probes without a JVM restart per
+  * experiment. Never referenced by any query path. */
 object ProbeShim {
   def initFor(base: DataFrame, n: Long, mode: String, seed: Long): DataFrame =
     GraphAnn.initFor(base, n, mode, seed)
