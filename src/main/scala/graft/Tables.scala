@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{expr, timestamp_micros}
+import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types._
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
@@ -57,4 +57,14 @@ object Tables {
   }
   def documents(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "documents")
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "embeddings")
+
+  /** The stored embedding of `vecId` — the query vector of every
+    * search-by-id entry point (one single-row job). An absent id fails
+    * naming the id and `sfDir`. */
+  def queryVector(spark: SparkSession, sfDir: String, vecId: Long): Array[Float] =
+    embeddings(spark, sfDir).filter(col("vec_id") === vecId)
+      .select("embedding").head(1).headOption
+      .getOrElse(throw new NoSuchElementException(
+        s"vec_id $vecId not found in $sfDir/embeddings.parquet"))
+      .getSeq[Float](0).toArray
 }

@@ -112,20 +112,11 @@ object ChainedIndex {
       Chained(pm, index, pq, coded)
     }
 
-  /** The query's PCA projection — the SAME mat_vec kernel as the
-    * corpus side (one single-row job), so coarse distances are
-    * bit-reproducible against the index (the knnPcaRerank
-    * discipline). */
-  private def projectQuery(spark: SparkSession, sfDir: String,
-                           ch: Chained, queryId: Long): Array[Float] =
-    Tables.embeddings(spark, sfDir).filter(col("vec_id") === queryId)
-      .select(mat_vec(col("embedding"), ch.pca.comps).as("p"))
-      .head().getSeq[Float](0).toArray
-
   /** Chained search: project → probe → residual ADC over probed codes
     * → exact refine against the ORIGINAL full-dim vectors. Returns
     * (vec_id, dist) with EXACT squared-L2 distances, ascending,
-    * vec_id tie-break, query excluded.
+    * vec_id tie-break, query excluded (the [[IvfIndex.scanProbed]]
+    * contract, also kept by the refine).
     *
     * Pinned degenerate case ([[ChainedIndexSpec]]): nprobe = nlist and
     * rerank ≥ corpus size reproduces the exact global kNN — the probe
@@ -135,25 +126,34 @@ object ChainedIndex {
              kNeighbors: Int = 10, dOut: Int = 24, nlist: Int = 4,
              nprobe: Int = 3, m: Int = 8, k: Int = 16,
              rerank: Int = 100): DataFrame = {
-    require(rerank >= kNeighbors, s"chained: rerank=$rerank < k=$kNeighbors")
     val ch = forEmbeddings(spark, sfDir, dOut, nlist, m, k)
-    val qp = projectQuery(spark, sfDir, ch, queryId)
-    val probed = IvfIndex.probeLists(ch.index, qp, nprobe)
-    val luts = Pq.residualLuts(ch.pq, ch.index, qp, probed)
-    val shortlist = ch.coded
-      .filter(col("list_id").isin(probed: _*))
-      .filter(col("id") =!= queryId)
-      .select(col("id").as("vec_id"),
-        pq_adc_by_list(col("list_id"), col("codes"), luts).as("adc_dist"))
-      .orderBy(col("adc_dist").asc, col("vec_id").asc)
-      .limit(rerank)
+    searchCoded(spark, sfDir, ch.pca, ch.index, ch.pq, ch.coded,
+      queryId, kNeighbors, nprobe, rerank)
+  }
+
+  /** The search stages shared by the in-memory and the persisted
+    * artifact. The query projection is [[Pq.rotateVector]], the
+    * driver-side twin of the corpus side's [[graft.functions.MatVec]]
+    * (same double-accumulate, float-out order), so coarse distances are
+    * bit-reproducible against the index. The probed `coded` lists are
+    * ADC-scored by [[IvfIndex.scanProbed]], and the `rerank` shortlist's
+    * original vectors, fetched by a broadcast semi-join, are scored
+    * exactly. */
+  private def searchCoded(spark: SparkSession, sfDir: String, pca: Pca.Model,
+                          index: IvfIndex.Index, pq: Pq.Model, coded: DataFrame,
+                          queryId: Long, kNeighbors: Int, nprobe: Int,
+                          rerank: Int): DataFrame = {
+    require(rerank >= kNeighbors, s"chained: rerank=$rerank < k=$kNeighbors")
+    val q = Tables.queryVector(spark, sfDir, queryId)
+    val qp = Pq.rotateVector(pca.comps, q)
+    val probed = IvfIndex.probeLists(index, qp, nprobe)
+    val shortlist = IvfIndex.scanProbed(coded, probed,
+        pq_adc_by_list(col("list_id"), col("codes"), Pq.residualLuts(pq, index, qp, probed)),
+        "adc_dist", IvfIndex.TopK(rerank), excludeId = Some(queryId), idAs = "vec_id")
       .select(col("vec_id"))
-    val emb = Tables.embeddings(spark, sfDir)
-    val qRow = emb.filter(col("vec_id") === queryId)
-      .select(col("embedding").as("q_embedding"))
-    emb.join(broadcast(shortlist), Seq("vec_id"), "left_semi")
-      .join(broadcast(qRow))
-      .select(col("vec_id"), l2sq(col("embedding"), col("q_embedding")).as("dist"))
+    Tables.embeddings(spark, sfDir)
+      .join(broadcast(shortlist), Seq("vec_id"), "left_semi")
+      .select(col("vec_id"), l2sq(col("embedding"), typedlit(q)).as("dist"))
       .orderBy(col("dist").asc, col("vec_id").asc)
       .limit(kNeighbors)
   }
@@ -335,8 +335,8 @@ object ChainedIndex {
 
   /** Chained search against the PERSISTED artifact: identical stages
     * to [[search]], but every model comes from [[load]] and the ADC
-    * scan reads only the probed `list_id=` code partitions (static
-    * partition pruning; never a float, never a posting). Because the
+    * scan reads the probed `list_id=` code partitions (never a float,
+    * never a posting). Because the
     * loaded models are bit-identical to the trained ones, this returns
     * EXACTLY [[search]]'s rows — the registered audit pins that. */
   def persistedSearch(spark: SparkSession, sfDir: String, queryId: Long = 0L,
@@ -351,28 +351,7 @@ object ChainedIndex {
     * directory, not just the session-default one. */
   def searchLoaded(spark: SparkSession, sfDir: String, p: Persisted,
                    queryId: Long = 0L, kNeighbors: Int = 10,
-                   nprobe: Int = 3, rerank: Int = 100): DataFrame = {
-    require(rerank >= kNeighbors, s"chained: rerank=$rerank < k=$kNeighbors")
-    val qp = Tables.embeddings(spark, sfDir).filter(col("vec_id") === queryId)
-      .select(mat_vec(col("embedding"), p.pca.comps).as("proj"))
-      .head().getSeq[Float](0).toArray
-    val probed = IvfIndex.probeLists(p.indexView, qp, nprobe)
-    val luts = Pq.residualLuts(p.pq, p.indexView, qp, probed)
-    val shortlist = spark.read.parquet(p.codesDir)
-      .filter(col("list_id").isin(probed: _*))
-      .filter(col("id") =!= queryId)
-      .select(col("id").as("vec_id"),
-        pq_adc_by_list(col("list_id"), col("codes"), luts).as("adc_dist"))
-      .orderBy(col("adc_dist").asc, col("vec_id").asc)
-      .limit(rerank)
-      .select(col("vec_id"))
-    val emb = Tables.embeddings(spark, sfDir)
-    val qRow = emb.filter(col("vec_id") === queryId)
-      .select(col("embedding").as("q_embedding"))
-    emb.join(broadcast(shortlist), Seq("vec_id"), "left_semi")
-      .join(broadcast(qRow))
-      .select(col("vec_id"), l2sq(col("embedding"), col("q_embedding")).as("dist"))
-      .orderBy(col("dist").asc, col("vec_id").asc)
-      .limit(kNeighbors)
-  }
+                   nprobe: Int = 3, rerank: Int = 100): DataFrame =
+    searchCoded(spark, sfDir, p.pca, p.indexView, p.pq,
+      spark.read.parquet(p.codesDir), queryId, kNeighbors, nprobe, rerank)
 }

@@ -241,7 +241,7 @@ object GraphAnn {
     * shuffle (≈9 GB). Past the broadcast ceiling the shuffle join is
     * the correct shape (the cluster provisions shuffle disk; a 100 TB
     * corpus never broadcasts its embeddings). */
-  private val BroadcastBaseBytes = 1.5e9
+  private[graft] val BroadcastBaseBytes = 1.5e9
 
   /** Broadcast ceiling for the und/fresh pair frames inside a descent
     * round (~2·n·kb 16-byte pairs): under it the candidate joins run
@@ -378,46 +378,12 @@ object GraphAnn {
     edges
   }
 
-  /** The r14 two-shuffle descent kernel, kept ONLY as the equivalence
-    * oracle for [[descend]]'s one-shuffle round (spec-pinned
-    * bit-identical; never called from a query path). */
-  private[graft] def descendLegacy(base: DataFrame, init: DataFrame, kb: Int,
-                                   iters: Int, rho: Double, seed: Long): DataFrame = {
-    val n = base.count()
-    val dim = base.select(col("vec")).head.getSeq[Float](0).size
-    val big = n * dim * 4.0 > BroadcastBaseBytes
-    def side(df: DataFrame): DataFrame = if (big) df else broadcast(df)
-    var edges = topKPerSrc(init, kb).localCheckpoint(true)
-    var it = 0
-    while (it < iters) {
-      val adj = edges.select(col("src"), col("dst"))
-      val und = adj.union(adj.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-      val right = if (rho >= 1.0) und
-        else und.sample(withReplacement = false, rho, seed + it)
-      val cand = und.as("a")
-        .join(right.as("b"), col("a.dst") === col("b.src"))
-        .select(col("a.src").as("src"), col("b.dst").as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .distinct()
-      val scored = cand
-        .join(side(base.select(col("id").as("src"), col("vec").as("sv"))), Seq("src"))
-        .join(side(base.select(col("id").as("dst"), col("vec").as("dv"))), Seq("dst"))
-        .select(col("src"), col("dst"), l2sq(col("sv"), col("dv")).as("dist"))
-      val merged = topKPerSrc(edges.unionByName(scored), kb).localCheckpoint(true)
-      edges.unpersist(blocking = false)
-      edges = merged
-      it += 1
-    }
-    edges
-  }
-
   /** Per-src smallest-k by (dist, dst) — groupBy + bounded top-k
     * aggregate, no window. Duplicate (dist, dst) pairs (an edge
     * rediscovered in a later round) collapse inside the aggregate. r16:
     * [[graft.functions.TopKPairs]] replaces the collect_list +
-    * array_sort + array_distinct + slice formulation (kept below as
-    * [[topKPerSrcLegacy]], the bit-identity oracle) — the candidate
+    * array_sort + array_distinct + slice formulation (kept in test code
+    * as the bit-identity oracle) — the candidate
     * stream is 100-500x longer than k in the heavy descent rounds, and
     * the unbounded per-group list + full sort was ~half the cost of a
     * heavy merge round (probe: 2.0 s vs a 1.1 s aggregation-free floor
@@ -425,17 +391,6 @@ object GraphAnn {
   private[graft] def topKPerSrc(edges: DataFrame, k: Int): DataFrame =
     edges.groupBy(col("src"))
       .agg(graft.functions.top_k_pairs(col("dist"), col("dst"), k).as("top"))
-      .select(col("src"), explode(col("top")).as("e"))
-      .select(col("src"), col("e.dst").as("dst"), col("e.dist").as("dist"))
-
-  /** The pre-r16 `topKPerSrc` formulation, kept ONLY as the
-    * equivalence oracle for [[graft.functions.TopKPairs]]
-    * (TopKPairsAggSpec pins them bit-identical; never on a query
-    * path). */
-  private[graft] def topKPerSrcLegacy(edges: DataFrame, k: Int): DataFrame =
-    edges.groupBy(col("src"))
-      .agg(slice(array_distinct(array_sort(
-        collect_list(struct(col("dist"), col("dst"))))), 1, k).as("top"))
       .select(col("src"), explode(col("top")).as("e"))
       .select(col("src"), col("e.dst").as("dst"), col("e.dist").as("dist"))
 
@@ -980,8 +935,7 @@ object GraphAnn {
                        queryId: Long = 0L, k: Int = 10, ef: Int = 32): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
     val g = forEmbeddings(spark, sfDir)
-    val q = emb.filter(col("vec_id") === queryId)
-      .select("embedding").head.getSeq[Float](0).toArray
+    val q = Tables.queryVector(spark, sfDir, queryId)
     val res = searchBeam(spark, g, emb, q, k, ef,
       seeds = seedsForEmbeddings(spark, sfDir), excludeId = Some(queryId))
     searchFlags(spark, sfDir, res, q, queryId, k)
@@ -1022,8 +976,7 @@ object GraphAnn {
     val g = forEmbeddings(spark, sfDir)
     val s1 = spreadSeeds(emb, nSeeds)
     val s2 = spreadSeeds(emb, nSeeds)
-    val q = emb.filter(col("vec_id") === queryId)
-      .select("embedding").head.getSeq[Float](0).toArray
+    val q = Tables.queryVector(spark, sfDir, queryId)
     val res = searchBeam(spark, g, emb, q, k, ef, seeds = s1,
       excludeId = Some(queryId))
     val bits = math.max(1, math.min(20,
@@ -1046,8 +999,7 @@ object GraphAnn {
                           queryId: Long = 0L, k: Int = 10, ef: Int = 32): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
     val idx = persistedGraphFor(spark, sfDir)
-    val q = emb.filter(col("vec_id") === queryId)
-      .select("embedding").head.getSeq[Float](0).toArray
+    val q = Tables.queryVector(spark, sfDir, queryId)
     val seeds = seedsForEmbeddings(spark, sfDir)
     val res = searchIndex(spark, idx, emb, q, k, ef, seeds = seeds,
       excludeId = Some(queryId))
@@ -1128,8 +1080,7 @@ object GraphAnn {
     val hit = g.join(exact, Seq("src", "dst"), "left_semi")
       .agg(count(lit(1)).as("n_hit"))
     val tot = exact.agg(count(lit(1)).as("n_exact"))
-    val q = emb.filter(col("vec_id") === queryId)
-      .select("embedding").head.getSeq[Float](0).toArray
+    val q = Tables.queryVector(spark, sfDir, queryId)
     val probe = searchIndex(spark, idx, emb, q, k, ef,
       seeds = seedIds(g, 16), excludeId = Some(queryId))
     val exactProbe = VectorSearchOps.knnExactL2(spark, sfDir, queryId, k)

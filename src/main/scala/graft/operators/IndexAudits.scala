@@ -96,10 +96,6 @@ object IndexAudits {
   private def embeddings(spark: SparkSession, sfDir: String): DataFrame =
     Tables.embeddings(spark, sfDir)
 
-  private def queryVec(spark: SparkSession, sfDir: String, id: Long): Array[Float] =
-    embeddings(spark, sfDir).filter(col("vec_id") === id)
-      .select("embedding").head.getSeq[Float](0).toArray
-
   // ---- IVF build / append -------------------------------------------
 
   /** Audit of the IVF build (registered `ivf_build_stats`): the
@@ -154,7 +150,7 @@ object IndexAudits {
                         persisted: Boolean, nlist: Int = 4, nprobe: Int = 2,
                         k: Int = 10, minHits: Int = 5): DataFrame = {
     val emb = embeddings(spark, sfDir)
-    val q = queryVec(spark, sfDir, 0L)
+    val q = Tables.queryVector(spark, sfDir, 0L)
     val idx =
       if (persisted) IvfIndex.persistedForEmbeddings(spark, sfDir, nlist)
       else IvfIndex.forEmbeddings(spark, sfDir, nlist)
@@ -265,7 +261,7 @@ object IndexAudits {
   def f16Audit(spark: SparkSession, sfDir: String,
                k: Int = 10, minHits: Int = 8): DataFrame = {
     val emb = embeddings(spark, sfDir)
-    val q = queryVec(spark, sfDir, 0L)
+    val q = Tables.queryVector(spark, sfDir, 0L)
     val res = Quantization.knnF16(spark, sfDir, 0L, k) // (vec_id, dist)
     val rtBad = emb.select(f16RoundtripBad(col("embedding")).as("bad"))
       .agg(sum(col("bad")).as("n_bad"))
@@ -365,7 +361,7 @@ object IndexAudits {
                     nlist: Int = 4, nprobe: Int = 2,
                     k: Int = 10, minHits: Int = 5): DataFrame = {
     val emb = embeddings(spark, sfDir)
-    val q = queryVec(spark, sfDir, 0L)
+    val q = Tables.queryVector(spark, sfDir, 0L)
     val idx = IpSearch.forEmbeddingsIp(spark, sfDir, nlist)
     val res = IpSearch.searchIp(idx, q, k, nprobe, Some(0L)) // (id, ip)
     val probed = IpSearch.probeListsIp(idx, q, nprobe)
@@ -415,7 +411,7 @@ object IndexAudits {
                              eps: Double = 1.6,
                              minRecall: Double = 0.3): DataFrame = {
     val emb = embeddings(spark, sfDir)
-    val q = queryVec(spark, sfDir, 0L)
+    val q = Tables.queryVector(spark, sfDir, 0L)
     val idx = IvfIndex.forEmbeddings(spark, sfDir, nlist)
     val res = IvfIndex.rangeSearch(idx, q, eps, nprobe, Some(0L)) // (id, dist)
     val probed = IvfIndex.probeLists(idx, q, nprobe)
@@ -459,7 +455,7 @@ object IndexAudits {
                           nlist: Int = 4, nprobe: Int = 2, k: Int = 10,
                           minRecall: Double = 0.3): DataFrame = {
     val emb = embeddings(spark, sfDir)
-    val q = queryVec(spark, sfDir, 0L)
+    val q = Tables.queryVector(spark, sfDir, 0L)
     val idx = IvfIndex.forEmbeddings(spark, sfDir, nlist)
     val sel = col("id") >= 100L && col("id") < 400L
     val res = IvfIndex.searchFiltered(idx, q, k, nprobe, sel, Some(0L))
@@ -633,7 +629,7 @@ object IndexAudits {
   def pqFlatAudit(spark: SparkSession, sfDir: String, k: Int = 10,
                   rerank: Int = 100, minHits: Int = 4): DataFrame = {
     val emb = embeddings(spark, sfDir)
-    val q = queryVec(spark, sfDir, 0L)
+    val q = Tables.queryVector(spark, sfDir, 0L)
     val res = Pq.searchPq(spark, sfDir, rerank = rerank) // (vec_id, dist)
     val dmatch = res
       .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
@@ -659,7 +655,7 @@ object IndexAudits {
   def pcaRerankAudit(spark: SparkSession, sfDir: String, k: Int = 10,
                      rerank: Int = 200, dOut: Int = 24, minHits: Int = 6): DataFrame = {
     val emb = embeddings(spark, sfDir)
-    val q = queryVec(spark, sfDir, 0L)
+    val q = Tables.queryVector(spark, sfDir, 0L)
     // shortlist tracks corpus size (max(rerank, n/10)) — the r12
     // chained-index lesson, re-learned on the sf1 scale point: a FIXED
     // shortlist is a shrinking fraction of a growing corpus, and
@@ -726,7 +722,7 @@ object IndexAudits {
   def ivfPqAudit(spark: SparkSession, sfDir: String, nlist: Int = 4,
                  nprobe: Int = 2, k: Int = 10, minHits: Int = 1): DataFrame = {
     val idx = IvfIndex.forEmbeddings(spark, sfDir, nlist)
-    val q = queryVec(spark, sfDir, 0L)
+    val q = Tables.queryVector(spark, sfDir, 0L)
     val probed = IvfIndex.probeLists(idx, q, nprobe)
     val res = Pq.ivfSearchPq(spark, sfDir) // (vec_id, adc_dist)
     val member = res
@@ -773,7 +769,7 @@ object IndexAudits {
                   lam: Double = 0.7, lamC: Double = 0.3,
                   minHits: Int = 5): DataFrame = {
     val idx = IvfIndex.forEmbeddings(spark, sfDir, nlist)
-    val q = queryVec(spark, sfDir, 0L)
+    val q = Tables.queryVector(spark, sfDir, 0L)
     val probed = IvfIndex.probeLists(idx, q, nprobe)
     val res = Mmr.mmrIvf(spark, sfDir, 0L, k, c, nlist, nprobe, lam, lamC)
     val member = res
@@ -822,7 +818,7 @@ object IndexAudits {
                     dOut: Int = 24, nlist: Int = 4, nprobe: Int = 3,
                     rerank: Int = 100, minHits: Int = 5): DataFrame = {
     val ch = ChainedIndex.forEmbeddings(spark, sfDir, dOut, nlist)
-    val q = queryVec(spark, sfDir, 0L)
+    val q = Tables.queryVector(spark, sfDir, 0L)
     val nCorpus = embeddings(spark, sfDir).count()
     val rr = math.max(rerank, (nCorpus / 10).toInt)
     val res = ChainedIndex.search(spark, sfDir, 0L, kNeighbors, dOut, nlist,
@@ -970,7 +966,7 @@ object IndexAudits {
   def ivfQuantAudit(spark: SparkSession, sfDir: String, nlist: Int = 4,
                     nprobe: Int = 2, k: Int = 10, minHits: Int = 5): DataFrame = {
     val idx = IvfIndex.forEmbeddings(spark, sfDir, nlist)
-    val q = queryVec(spark, sfDir, 0L)
+    val q = Tables.queryVector(spark, sfDir, 0L)
     val probed = IvfIndex.probeLists(idx, q, nprobe)
     val res = Quantization.ivfSearchQuantized(spark, sfDir) // (vec_id, sim)
     val member = res
@@ -995,7 +991,7 @@ object IndexAudits {
   def ivfBinaryAudit(spark: SparkSession, sfDir: String, nlist: Int = 4,
                      nprobe: Int = 2, k: Int = 10, minHits: Int = 5): DataFrame = {
     val idx = IvfIndex.forEmbeddings(spark, sfDir, nlist)
-    val q = queryVec(spark, sfDir, 0L)
+    val q = Tables.queryVector(spark, sfDir, 0L)
     val probed = IvfIndex.probeLists(idx, q, nprobe)
     val dim = embeddings(spark, sfDir)
       .select(org.apache.spark.sql.functions.size(col("embedding"))).head.getInt(0)

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** FAISS `index_factory` string surface — the constructor a reference
   * user actually holds: the reference builds its index with the
@@ -153,9 +152,7 @@ object IndexFactory {
       case (None, None, Flat) =>
         VectorSearchOps.knnExactL2(spark, sfDir, queryId, k)
       case (None, Some(Ivf(n)), Flat) =>
-        val emb = graft.Tables.embeddings(spark, sfDir)
-        val q = emb.filter(col("vec_id") === queryId)
-          .select("embedding").head.getSeq[Float](0).toArray
+        val q = graft.Tables.queryVector(spark, sfDir, queryId)
         IvfIndex.search(IvfIndex.forEmbeddings(spark, sfDir, n), q, k,
             nprobe, excludeId = Some(queryId))
           .withColumnRenamed("id", "vec_id")
@@ -173,8 +170,7 @@ object IndexFactory {
         Quantization.knnBinary(spark, sfDir, queryId, k)
       case (None, None, HnswEnc(m)) =>
         val emb = graft.Tables.embeddings(spark, sfDir)
-        val q = emb.filter(col("vec_id") === queryId)
-          .select("embedding").head.getSeq[Float](0).toArray
+        val q = graft.Tables.queryVector(spark, sfDir, queryId)
         GraphAnn.searchBeam(spark, GraphAnn.forEmbeddings(spark, sfDir, k = m),
           emb, q, k, ef = math.max(32, k),
           seeds = GraphAnn.seedsForEmbeddings(spark, sfDir, k = m),

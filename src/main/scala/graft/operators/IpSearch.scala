@@ -29,8 +29,8 @@ import graft.functions.{nearest_list_ip, vec_dot}
   * scan + TakeOrdered (no shuffle of the corpus side; the query rides
   * in as a broadcast one-row join). The IVF form files postings by a
   * codegen'd narrow-map assignment ([[graft.functions.NearestList]]
-  * with `ip = true`) and prunes search to the probed lists. Ordering
-  * ties break `(score DESC, id ASC)` — deterministic, SURVEY §7.4.
+  * with `ip = true`) and searches through [[IvfIndex.scanProbed]]
+  * (its pruning, exclusion and tie-break contract, score descending).
   *
   * NOTE the known IP-IVF recall caveat (documented in FAISS's own
   * guidelines): L2-trained cells are not aligned with dot-product
@@ -96,33 +96,22 @@ object IpSearch {
     * the IP mirror of [[IvfIndex.probeLists]]; driver-side over the
     * ≤nlist centroid matrix, the same bounded-collect class). */
   def probeListsIp(index: IvfIndex.Index, q: Array[Float],
-                   nprobe: Int): Seq[Int] = {
-    def ip(c: Array[Float]): Double = {
+                   nprobe: Int): Seq[Int] =
+    IvfIndex.rankLists(index, q, nprobe, descending = true) { c =>
       var acc = 0.0; var i = 0
       while (i < c.length) { acc += q(i).toDouble * c(i); i += 1 }
       acc
     }
-    index.centroidArrays
-      .map { case (lid, c) => (lid, ip(c)) }
-      .sortBy { case (lid, s) => (-s, lid) }
-      .take(nprobe).map(_._1).toSeq
-  }
 
-  /** IVF MIPS search: scan the probed lists only (partition-pruned
-    * like the L2 [[IvfIndex.search]]), score by dot, keep the global
-    * top-k descending. `nprobe = nlist` scans every list and — IVFFlat
-    * stores raw vectors — reproduces [[knnExactIp]] bit-for-bit. */
+  /** IVF MIPS search: [[probeListsIp]], then [[IvfIndex.scanProbed]]
+    * scoring by dot, descending. Returns (id, ip). `nprobe = nlist`
+    * scans every list and — IVFFlat stores raw vectors — reproduces
+    * [[knnExactIp]] bit-for-bit. */
   def searchIp(index: IvfIndex.Index, q: Array[Float], k: Int, nprobe: Int,
-               excludeId: Option[Long] = None): DataFrame = {
-    val probed = probeListsIp(index, q, nprobe)
-    val base = index.postings.filter(col("list_id").isin(probed: _*))
-    val noSelf = excludeId.fold(base)(id => base.filter(col("id") =!= id))
-    noSelf
-      .withColumn("ip", vec_dot(col("embedding"), typedlit(q)))
-      .orderBy(col("ip").desc, col("id").asc)
-      .limit(k)
-      .select(col("id"), col("ip"))
-  }
+               excludeId: Option[Long] = None): DataFrame =
+    IvfIndex.scanProbed(index.postings, probeListsIp(index, q, nprobe),
+      vec_dot(col("embedding"), typedlit(q)), "ip", IvfIndex.TopK(k),
+      descending = true, excludeId = excludeId)
 }
 
 /** Cosine-metric IVF — the third point of the FAISS metric triangle,
@@ -134,12 +123,11 @@ object IpSearch {
   * RAW vectors — the emitted score is `cosine_sim` recomputed on the
   * originals with the engine's standard kernel, so `nprobe = nlist`
   * reproduces [[VectorSearchOps.knnExactCosine]] bit-for-bit (same
-  * expression, same `(sim DESC, id ASC)` tiebreak) rather than a
-  * derived `1 - d/2` approximation that would drift in the last ulp.
+  * expression, same tie order) rather than a derived `1 - d/2`
+  * approximation that would drift in the last ulp.
   *
   * Scale posture: identical to the L2 family — the normalization is a
-  * narrow map paid once at build; search is partition-pruned postings
-  * + TakeOrdered. */
+  * narrow map paid once at build; search is [[IvfIndex.scanProbed]]. */
 object CosineIvf {
 
   private val cache = JvmCaches.sessionMap[(String, Int), IvfIndex.Index]()
@@ -175,13 +163,8 @@ object CosineIvf {
       math.sqrt(acc)
     }
     val qUnit = q.map(x => (x / n).toFloat)
-    val probed = IvfIndex.probeLists(index, qUnit, nprobe)
-    val base = index.postings.filter(col("list_id").isin(probed: _*))
-    val noSelf = excludeId.fold(base)(id => base.filter(col("id") =!= id))
-    noSelf
-      .withColumn("sim", graft.functions.cosine_sim(col("embedding"), typedlit(q)))
-      .orderBy(col("sim").desc, col("id").asc)
-      .limit(k)
-      .select(col("id"), col("sim"))
+    IvfIndex.scanProbed(index.postings, IvfIndex.probeLists(index, qUnit, nprobe),
+      graft.functions.cosine_sim(col("embedding"), typedlit(q)), "sim",
+      IvfIndex.TopK(k), descending = true, excludeId = excludeId)
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.linalg.{Vector => MlVector}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.l2sq
@@ -120,77 +120,115 @@ object IvfIndex {
     * to the query vector (reference coarse quantizer, app.py:69-70).
     * Centroid table is ≤ nlist rows, so this mirrors the reference's
     * driver/library split and lets the postings scan prune partitions
-    * statically. */
-  def probeLists(index: Index, q: Array[Float], nprobe: Int): Seq[Int] = {
-    index.centroidArrays
-      .map { case (lid, c) =>
-        var acc = 0.0; var i = 0
-        while (i < c.length) { val d = c(i) - q(i); acc += d * d; i += 1 }
-        (lid, acc)
-      }
-      .sortBy { case (lid, d) => (d, lid) }
+    * statically. Ties keep the smaller list id (first-min). */
+  def probeLists(index: Index, q: Array[Float], nprobe: Int): Seq[Int] =
+    rankLists(index, q, nprobe, descending = false) { c =>
+      var acc = 0.0; var i = 0
+      while (i < c.length) { val d = c(i) - q(i); acc += d * d; i += 1 }
+      acc
+    }
+
+  /** The one driver-side probe loop behind [[probeLists]] and
+    * [[IpSearch.probeListsIp]]: score every centroid, rank by
+    * `(score, list_id)` — score ascending, or descending when
+    * `descending` — and keep the first `nprobe` list ids. Rejects
+    * `nprobe < 1` (it would probe nothing and silently return no rows)
+    * and a query whose length is not the centroid dimension (the
+    * scoring loop would otherwise truncate or overrun it). */
+  private[graft] def rankLists(index: Index, q: Array[Float], nprobe: Int,
+                               descending: Boolean)
+                              (score: Array[Float] => Double): Seq[Int] = {
+    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
+    val cents = index.centroidArrays
+    cents.headOption.foreach { case (_, c) =>
+      require(q.length == c.length,
+        s"query has ${q.length} dims but the centroids have ${c.length}")
+    }
+    cents
+      .map { case (lid, c) => (lid, score(c)) }
+      .sortBy { case (lid, s) => (if (descending) -s else s, lid) }
       .take(nprobe).map(_._1).toSeq
   }
 
-  /** IVF search (reference app.py:58-75): probe the nprobe nearest
-    * lists, scan only those postings (partition-pruned when the index
-    * is parquet-backed), distance + deterministic top-k. Excludes
-    * `excludeId` when searching by a stored vector (self-exclusion,
-    * app.py:91-93 semantics). */
-  def search(index: Index, q: Array[Float], k: Int, nprobe: Int,
-             excludeId: Option[Long] = None): DataFrame = {
-    val probed = probeLists(index, q, nprobe)
-    val base = index.postings
-      .filter(col("list_id").isin(probed: _*))
-    val noSelf = excludeId.fold(base)(id => base.filter(col("id") =!= id))
-    noSelf
-      .withColumn("dist", l2sq(col("embedding"), typedlit(q)))
-      .orderBy(col("dist").asc, col("id").asc)
-      .limit(k)
-      .select(col("id"), col("dist"))
+  /** How [[scanProbed]] cuts its ranked candidates: the first `k`, or
+    * every candidate scoring strictly below `eps` (range search). */
+  private[graft] sealed trait Cut
+  private[graft] final case class TopK(k: Int) extends Cut
+  private[graft] final case class Below(eps: Double) extends Cut
+
+  /** The probed-list scan every IVF-family search runs (the reference's
+    * coarse-probe → scan → top-k, app.py:58-75). Its contract, stated
+    * here once:
+    *
+    *  - pruning: only postings whose `list_id` is in `probed` are read —
+    *    on a parquet-backed index a static partition filter, so a query
+    *    touches nprobe/nlist of the data;
+    *  - `within` (default: nothing) further restricts the probed rows:
+    *    an id selector, a metadata or shortlist semi-join, or a
+    *    broadcast query-row join whose columns `score` reads;
+    *  - exclusion: `excludeId` drops that id (self-exclusion when
+    *    searching by a stored vector, app.py:91-93);
+    *  - ranking: `score` (named `scoreAs`) ascending for distances,
+    *    descending when `descending` (similarities); ties break on
+    *    ascending id, so every result is deterministic;
+    *  - cut: [[TopK]] keeps the first k (all candidates when fewer
+    *    exist), [[Below]] keeps every candidate with `score < eps`.
+    *
+    * `postings` needs `list_id`, `id` and whatever `score` reads. The
+    * result is (`idAs`, `scoreAs`, `keep`…) in rank order. */
+  private[graft] def scanProbed(postings: DataFrame, probed: Seq[Int],
+                                score: Column, scoreAs: String, cut: Cut,
+                                descending: Boolean = false,
+                                excludeId: Option[Long] = None,
+                                idAs: String = "id", keep: Seq[String] = Nil,
+                                within: DataFrame => DataFrame = identity): DataFrame = {
+    val base = within(postings.filter(col("list_id").isin(probed: _*)))
+    val scored = excludeId.fold(base)(id => base.filter(col("id") =!= id))
+      .withColumn(scoreAs, score)
+    val order = Seq(
+      if (descending) col(scoreAs).desc else col(scoreAs).asc, col("id").asc)
+    val ranked = cut match {
+      case TopK(k) => scored.orderBy(order: _*).limit(k)
+      case Below(eps) => scored.filter(col(scoreAs) < eps).orderBy(order: _*)
+    }
+    val id = if (idAs == "id") col("id") else col("id").as(idAs)
+    ranked.select(id +: col(scoreAs) +: keep.map(col): _*)
   }
+
+  /** IVF search (reference app.py:58-75): [[probeLists]], then
+    * [[scanProbed]] scoring exact squared L2. Returns (id, dist). */
+  def search(index: Index, q: Array[Float], k: Int, nprobe: Int,
+             excludeId: Option[Long] = None): DataFrame =
+    scanProbed(index.postings, probeLists(index, q, nprobe),
+      l2sq(col("embedding"), typedlit(q)), "dist", TopK(k),
+      excludeId = excludeId)
 
   /** FAISS `search_and_reconstruct`: top-k search that returns the
     * STORED vectors alongside ids and distances — the one-call form a
     * retrieval pipeline uses when the hit payload is needed (rerank by
     * a second model, context assembly) without a second index
     * round-trip. For IVFFlat the stored vector IS the original, so no
-    * join back to the source table is needed: the probed postings scan
-    * already carries the embeddings, and the plan is [[search]]'s plus
-    * one projected column — same pruning, same TakeOrdered, no extra
-    * shuffle. */
+    * join back to the source table is needed: the plan is [[search]]'s
+    * plus one projected column. Returns (id, dist, embedding). */
   def searchAndReconstruct(index: Index, q: Array[Float], k: Int, nprobe: Int,
-                           excludeId: Option[Long] = None): DataFrame = {
-    val probed = probeLists(index, q, nprobe)
-    val base = index.postings.filter(col("list_id").isin(probed: _*))
-    val noSelf = excludeId.fold(base)(id => base.filter(col("id") =!= id))
-    noSelf
-      .withColumn("dist", l2sq(col("embedding"), typedlit(q)))
-      .orderBy(col("dist").asc, col("id").asc)
-      .limit(k)
-      .select(col("id"), col("dist"), col("embedding"))
-  }
+                           excludeId: Option[Long] = None): DataFrame =
+    scanProbed(index.postings, probeLists(index, q, nprobe),
+      l2sq(col("embedding"), typedlit(q)), "dist", TopK(k),
+      excludeId = excludeId, keep = Seq("embedding"))
 
   /** IVF range search (FAISS `IndexIVF.range_search`): the strict
     * `dist < eps` predicate (app.py:93's P3 semantics from a single
-    * query) over the PROBED lists only — partition-pruned exactly like
-    * [[search]], with the top-k replaced by the ε filter. `nprobe =
-    * nlist` probes every list and, because IVFFlat stores raw vectors,
-    * reproduces [[VectorSearchOps.rangeSearch]] bit-for-bit (the
-    * registered `range_search_ivf` contract); `nprobe < nlist` returns
-    * a subset whose distances are still exact. */
+    * query) over the probed lists — [[search]] with the top-k replaced
+    * by the ε cut. `nprobe = nlist` probes every list and, because
+    * IVFFlat stores raw vectors, reproduces
+    * [[VectorSearchOps.rangeSearch]] bit-for-bit (the registered
+    * `range_search_ivf` contract); `nprobe < nlist` returns a subset
+    * whose distances are still exact. */
   def rangeSearch(index: Index, q: Array[Float], eps: Double, nprobe: Int,
-                  excludeId: Option[Long] = None): DataFrame = {
-    val probed = probeLists(index, q, nprobe)
-    val base = index.postings
-      .filter(col("list_id").isin(probed: _*))
-    val noSelf = excludeId.fold(base)(id => base.filter(col("id") =!= id))
-    noSelf
-      .withColumn("dist", l2sq(col("embedding"), typedlit(q)))
-      .filter(col("dist") < eps)
-      .orderBy(col("dist").asc, col("id").asc)
-      .select(col("id"), col("dist"))
-  }
+                  excludeId: Option[Long] = None): DataFrame =
+    scanProbed(index.postings, probeLists(index, q, nprobe),
+      l2sq(col("embedding"), typedlit(q)), "dist", Below(eps),
+      excludeId = excludeId)
 
   /** Filtered IVF search — FAISS `SearchParameters(sel=IDSelector)`
     * (the search-time subset restriction the reference's stack exposes
@@ -207,19 +245,11 @@ object IvfIndex {
     * with `nprobe = nlist` the result equals the exact filtered scan
     * bit-for-bit (IVFFlat stores raw vectors). */
   def searchFiltered(index: Index, q: Array[Float], k: Int, nprobe: Int,
-                     sel: org.apache.spark.sql.Column,
-                     excludeId: Option[Long] = None): DataFrame = {
-    val probed = probeLists(index, q, nprobe)
-    val base = index.postings
-      .filter(col("list_id").isin(probed: _*))
-      .filter(sel)
-    val noSelf = excludeId.fold(base)(id => base.filter(col("id") =!= id))
-    noSelf
-      .withColumn("dist", l2sq(col("embedding"), typedlit(q)))
-      .orderBy(col("dist").asc, col("id").asc)
-      .limit(k)
-      .select(col("id"), col("dist"))
-  }
+                     sel: Column,
+                     excludeId: Option[Long] = None): DataFrame =
+    scanProbed(index.postings, probeLists(index, q, nprobe),
+      l2sq(col("embedding"), typedlit(q)), "dist", TopK(k),
+      excludeId = excludeId, within = _.filter(sel))
 
   /** Metadata-selector variant of [[searchFiltered]]: `meta` carries
     * (`metaIdCol`, attribute columns); candidates from the probed
@@ -229,19 +259,12 @@ object IvfIndex {
     * either way the corpus side stays partition-pruned. */
   def searchFilteredBy(index: Index, q: Array[Float], k: Int, nprobe: Int,
                        meta: DataFrame, metaIdCol: String,
-                       pred: org.apache.spark.sql.Column,
+                       pred: Column,
                        excludeId: Option[Long] = None): DataFrame = {
-    val probed = probeLists(index, q, nprobe)
     val keep = meta.filter(pred).select(col(metaIdCol).as("id"))
-    val base = index.postings
-      .filter(col("list_id").isin(probed: _*))
-      .join(keep, Seq("id"), "left_semi")
-    val noSelf = excludeId.fold(base)(id => base.filter(col("id") =!= id))
-    noSelf
-      .withColumn("dist", l2sq(col("embedding"), typedlit(q)))
-      .orderBy(col("dist").asc, col("id").asc)
-      .limit(k)
-      .select(col("id"), col("dist"))
+    scanProbed(index.postings, probeLists(index, q, nprobe),
+      l2sq(col("embedding"), typedlit(q)), "dist", TopK(k),
+      excludeId = excludeId, within = _.join(keep, Seq("id"), "left_semi"))
   }
 
   /** Reconstruct stored vectors by id — FAISS `reconstruct`/

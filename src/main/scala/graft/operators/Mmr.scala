@@ -117,10 +117,9 @@ object Mmr {
   /** Index-backed MMR (registered through
     * [[IndexAudits.mmrIvfAudit]]): the shortlist generator swaps from
     * the exact-cosine corpus scan to the IVF coarse probe — the swap
-    * the [[mmrRerank]] scaladoc promises. The probed lists' postings
-    * (a partition-pruned subset, nprobe/nlist of the corpus) are
-    * scored with the SAME codegen'd cosine kernel and the top-`c`
-    * (sim desc, vec_id asc) feeds the unchanged greedy — so with
+    * the [[mmrRerank]] scaladoc promises. [[IvfIndex.scanProbed]]
+    * scores the probed lists with the SAME codegen'd cosine kernel and
+    * its top-`c` feeds the unchanged greedy — so with
     * nprobe = nlist the probe prunes nothing and the result equals
     * [[mmrRerank]] EXACTLY (test-pinned); at lower nprobe coarse
     * misses cost shortlist recall only, never determinism. */
@@ -129,17 +128,11 @@ object Mmr {
              lam: Double = 0.7, lamC: Double = 0.3): DataFrame = {
     require(math.abs(lam + lamC - 1.0) < 1e-9, "mmr: lam + lamC must be 1")
     val index = IvfIndex.forEmbeddings(spark, sfDir, nlist)
-    val q = Tables.embeddings(spark, sfDir).filter(col("vec_id") === queryId)
-      .select(col("embedding")).head().getSeq[Float](0).toArray
-    val probed = IvfIndex.probeLists(index, q, nprobe)
-    val short = index.postings
-      .filter(col("list_id").isin(probed: _*))
-      .filter(col("id") =!= queryId)
-      .select(col("id").as("vec_id"),
-        graft.functions.cosine_sim(col("embedding"), typedlit(q)).as("sim"),
-        col("embedding"))
-      .orderBy(col("sim").desc, col("vec_id").asc)
-      .limit(c)
+    val q = Tables.queryVector(spark, sfDir, queryId)
+    val short = IvfIndex.scanProbed(index.postings, IvfIndex.probeLists(index, q, nprobe),
+        graft.functions.cosine_sim(col("embedding"), typedlit(q)), "sim",
+        IvfIndex.TopK(c), descending = true, excludeId = Some(queryId),
+        idAs = "vec_id", keep = Seq("embedding"))
       .collect() // bounded: c rows
       .map(r => (r.getLong(0), r.getDouble(1), r.getSeq[Float](2).toArray))
     val selected = greedy(short.toIndexedSeq, k, lam, lamC)

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{pq_adc, pq_encode}
@@ -142,8 +142,7 @@ object Pq {
                rerank: Int = 0): DataFrame = {
     val model = forEmbeddings(spark, sfDir, m, k)
     val emb = Tables.embeddings(spark, sfDir)
-    val q = emb.filter(col("vec_id") === queryId)
-      .select(col("embedding")).head.getSeq[Float](0).toArray
+    val q = Tables.queryVector(spark, sfDir, queryId)
     val adc = flatCodedFor(spark, sfDir, m, k)
       .filter(col("vec_id") =!= queryId)
       .select(col("vec_id"), pq_adc(col("codes"), adcTable(model, q)).as("adc_dist"))
@@ -254,9 +253,8 @@ object Pq {
     luts
   }
 
-  /** IVF-PQ: coarse centroids prune to the probed lists (the same
-    * partition-pruning shape as [[IvfIndex]]); only the surviving
-    * CODE postings are ADC-scored — the scan never touches a float
+  /** IVF-PQ: [[IvfIndex.scanProbed]] over the CODE postings of the
+    * probed lists, ADC-scored — the scan never touches a float
     * embedding. `residual = true` (default, FAISS IndexIVFPQ) encodes
     * and scores residuals; `residual = false` keeps the raw-vector
     * codes whose nprobe = nlist search equals [[searchPq]] exactly
@@ -275,41 +273,32 @@ object Pq {
                   m: Int = 8, k: Int = 16,
                   residual: Boolean = true, rerank: Int = 0): DataFrame = {
     val index = IvfIndex.forEmbeddings(spark, sfDir, nlist)
-    val q = Tables.embeddings(spark, sfDir)
-      .filter(col("vec_id") === queryId)
-      .select(col("embedding")).head.getSeq[Float](0).toArray
+    val q = Tables.queryVector(spark, sfDir, queryId)
     val probed = IvfIndex.probeLists(index, q, nprobe)
-    val coded = codedPostings(spark, sfDir, nlist, m, k, residual)
-      .filter(col("list_id").isin(probed: _*))
-      .filter(col("id") =!= queryId)
-    val score =
-      if (residual) {
-        val model = residualModelFor(spark, sfDir, nlist, m, k)
-        graft.functions.pq_adc_by_list(col("list_id"), col("codes"),
-          residualLuts(model, index, q, probed))
-      } else {
-        val model = forEmbeddings(spark, sfDir, m, k)
-        pq_adc(col("codes"), adcTable(model, q))
-      }
-    val adc = coded.select(col("id").as("vec_id"), score.as("adc_dist"))
-    if (rerank <= 0) {
-      adc.orderBy(col("adc_dist").asc, col("vec_id").asc).limit(kNeighbors)
-    } else {
-      val shortlist = adc
-        .orderBy(col("adc_dist").asc, col("vec_id").asc)
-        .limit(math.max(rerank, kNeighbors))
-        .select(col("vec_id"))
-      index.postings
-        .filter(col("list_id").isin(probed: _*))
-        .select(col("id").as("vec_id"), col("embedding"))
-        .join(broadcast(shortlist), Seq("vec_id"), "left_semi")
-        .select(col("vec_id"),
-          graft.functions.l2sq(col("embedding"),
-            typedlit(q)).as("dist"))
-        .orderBy(col("dist").asc, col("vec_id").asc)
-        .limit(kNeighbors)
+    def adc(n: Int): DataFrame =
+      IvfIndex.scanProbed(codedPostings(spark, sfDir, nlist, m, k, residual),
+        probed, ivfAdcScore(spark, sfDir, nlist, index, q, probed, m, k, residual),
+        "adc_dist", IvfIndex.TopK(n), excludeId = Some(queryId), idAs = "vec_id")
+    if (rerank <= 0) adc(kNeighbors)
+    else {
+      val shortlist = adc(math.max(rerank, kNeighbors)).select(col("vec_id").as("id"))
+      IvfIndex.scanProbed(index.postings, probed,
+        graft.functions.l2sq(col("embedding"), typedlit(q)), "dist",
+        IvfIndex.TopK(kNeighbors), idAs = "vec_id",
+        within = _.join(broadcast(shortlist), Seq("id"), "left_semi"))
     }
   }
+
+  /** The IVF-PQ ADC score of a `codes` column for query `q`: residual
+    * codes score against per-list LUTs built for the probed lists only
+    * ([[residualLuts]]), raw-vector codes against one flat LUT. */
+  private def ivfAdcScore(spark: SparkSession, sfDir: String, nlist: Int,
+                          index: IvfIndex.Index, q: Array[Float], probed: Seq[Int],
+                          m: Int, k: Int, residual: Boolean): Column =
+    if (residual)
+      graft.functions.pq_adc_by_list(col("list_id"), col("codes"),
+        residualLuts(residualModelFor(spark, sfDir, nlist, m, k), index, q, probed))
+    else pq_adc(col("codes"), adcTable(forEmbeddings(spark, sfDir, m, k), q))
 
   // ---- OPQ-lite: seeded random orthogonal rotation ---------------------
 
@@ -418,11 +407,10 @@ object Pq {
   private val persistedCache =
     JvmCaches.map[(String, Int, Int, Int, Boolean), String]()
 
-  /** IVF-PQ search over the PERSISTED code postings: probe lists
-    * driver-side, scan only the probed `list_id=` partitions (static
-    * partition pruning — same plan shape as
-    * [[IvfIndex.persistedForEmbeddings]] searches), ADC-score the
-    * binary codes. Nothing float-typed is read at all. */
+  /** IVF-PQ search over the PERSISTED code postings:
+    * [[IvfIndex.scanProbed]] over the `list_id=` partitions (the same
+    * plan shape as [[IvfIndex.persistedForEmbeddings]] searches),
+    * ADC-scoring the binary codes. Nothing float-typed is read. */
   def persistedSearchPq(spark: SparkSession, sfDir: String, queryId: Long = 0L,
                         kNeighbors: Int = 10, nlist: Int = 4, nprobe: Int = 2,
                         m: Int = 8, k: Int = 16,
@@ -434,26 +422,11 @@ object Pq {
       d
     })
     val index = IvfIndex.forEmbeddings(spark, sfDir, nlist)
-    val q = Tables.embeddings(spark, sfDir)
-      .filter(col("vec_id") === queryId)
-      .select(col("embedding")).head.getSeq[Float](0).toArray
+    val q = Tables.queryVector(spark, sfDir, queryId)
     val probed = IvfIndex.probeLists(index, q, nprobe)
-    val scan = spark.read.parquet(dir)
-      .filter(col("list_id").isin(probed: _*))
-      .filter(col("id") =!= queryId)
-    val score =
-      if (residual) {
-        val model = residualModelFor(spark, sfDir, nlist, m, k)
-        graft.functions.pq_adc_by_list(col("list_id"), col("codes"),
-          residualLuts(model, index, q, probed))
-      } else {
-        val model = forEmbeddings(spark, sfDir, m, k)
-        pq_adc(col("codes"), adcTable(model, q))
-      }
-    scan
-      .select(col("id").as("vec_id"), score.as("adc_dist"))
-      .orderBy(col("adc_dist").asc, col("vec_id").asc)
-      .limit(kNeighbors)
+    IvfIndex.scanProbed(spark.read.parquet(dir), probed,
+      ivfAdcScore(spark, sfDir, nlist, index, q, probed, m, k, residual), "adc_dist",
+      IvfIndex.TopK(kNeighbors), excludeId = Some(queryId), idAs = "vec_id")
   }
 
   /** Recall@k of IVF-PQ (either encoding) against the GLOBAL exact

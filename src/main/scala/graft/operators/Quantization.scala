@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{dequantize_f16, dot_i8, l2sq,
@@ -50,9 +50,7 @@ object Quantization {
              k: Int = 10): DataFrame = {
     val coded = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), quantize_f16(col("embedding")).as("codes"))
-    val q = Tables.embeddings(spark, sfDir)
-      .filter(col("vec_id") === queryId)
-      .select("embedding").head.getSeq[Float](0).toArray
+    val q = Tables.queryVector(spark, sfDir, queryId)
     coded.filter(col("vec_id") =!= queryId)
       .withColumn("dist", l2sq(dequantize_f16(col("codes")), typedlit(q)))
       .orderBy(col("dist").asc, col("vec_id").asc)
@@ -75,50 +73,37 @@ object Quantization {
       .select(col("q").as("q_query"))
     quantized.join(broadcast(q))
       .filter(col("vec_id") =!= queryId)
-      .withColumn("dot_qq", dot_i8(col("q"), col("q_query")))
-      .withColumn("norm_a", dot_i8(col("q"), col("q")))
-      .withColumn("norm_b", dot_i8(col("q_query"), col("q_query")))
-      .withColumn("sim",
-        when(col("norm_a") === 0L || col("norm_b") === 0L, lit(0.0))
-          .otherwise(col("dot_qq").cast("double") /
-            (sqrt(col("norm_a").cast("double")) * sqrt(col("norm_b").cast("double")))))
+      .withColumn("sim", quantizedCosine(col("q"), col("q_query")))
       .orderBy(col("sim").desc, col("vec_id").asc)
       .limit(k)
       .select(col("vec_id"), col("sim"))
+  }
+
+  /** Cosine of two int8 code arrays: integer dots, one double division
+    * at the end; 0.0 when either side quantizes to the zero vector. */
+  private def quantizedCosine(a: Column, b: Column): Column = {
+    val (ab, aa, bb) = (dot_i8(a, b), dot_i8(a, a), dot_i8(b, b))
+    when(aa === 0L || bb === 0L, lit(0.0))
+      .otherwise(ab.cast("double") /
+        (sqrt(aa.cast("double")) * sqrt(bb.cast("double"))))
   }
 
   /** IVF + int8: quantized postings inside the inverted lists (the
     * FAISS IVF-SQ8 shape — coarse quantizer prunes lists, scalar-
     * quantized codes score candidates; at 100 TB this is what keeps
     * the probed lists resident: 4× smaller than float32). List probing
-    * uses the float centroids (small); candidate scoring is quantized
-    * cosine — integer dots, scales cancel. With nprobe = nlist this
+    * uses the float centroids (small); [[IvfIndex.scanProbed]] scores
+    * candidates by quantized cosine against the query's int8 codes —
+    * integer dots, scales cancel. With nprobe = nlist this
     * must equal [[knnQuantized]] exactly (test-pinned). */
   def ivfSearchQuantized(spark: SparkSession, sfDir: String, queryId: Long = 0L,
                          k: Int = 10, nlist: Int = 4, nprobe: Int = 2): DataFrame = {
     val index = IvfIndex.forEmbeddings(spark, sfDir, nlist)
-    val q = Tables.embeddings(spark, sfDir)
-      .filter(col("vec_id") === queryId)
-      .select(col("embedding")).head.getSeq[Float](0).toArray
-    val probed = IvfIndex.probeLists(index, q, nprobe)
-    val qPosting = index.postings
-      .filter(col("id") === queryId)
-      .select(quantize_i8(col("embedding")).as("q_query"))
-    index.postings
-      .filter(col("list_id").isin(probed: _*))
-      .filter(col("id") =!= queryId)
-      .select(col("id").as("vec_id"), quantize_i8(col("embedding")).as("q"))
-      .join(broadcast(qPosting))
-      .withColumn("dot_qq", dot_i8(col("q"), col("q_query")))
-      .withColumn("norm_a", dot_i8(col("q"), col("q")))
-      .withColumn("norm_b", dot_i8(col("q_query"), col("q_query")))
-      .withColumn("sim",
-        when(col("norm_a") === 0L || col("norm_b") === 0L, lit(0.0))
-          .otherwise(col("dot_qq").cast("double") /
-            (sqrt(col("norm_a").cast("double")) * sqrt(col("norm_b").cast("double")))))
-      .orderBy(col("sim").desc, col("vec_id").asc)
-      .limit(k)
-      .select(col("vec_id"), col("sim"))
+    val q = Tables.queryVector(spark, sfDir, queryId)
+    IvfIndex.scanProbed(index.postings, IvfIndex.probeLists(index, q, nprobe),
+      quantizedCosine(quantize_i8(col("embedding")), quantize_i8(typedlit(q))),
+      "sim", IvfIndex.TopK(k), descending = true, excludeId = Some(queryId),
+      idAs = "vec_id")
   }
 
   /** Recall@k of quantized cosine against exact cosine for one query —
@@ -206,7 +191,8 @@ object Quantization {
 
   /** IVF + binary codes (FAISS IndexBinaryIVF): float-centroid list
     * probing (the [[IvfIndex]] coarse quantizer, small) + Hamming
-    * scoring over sign-bit signatures of ONLY the probed lists' rows —
+    * scoring by [[IvfIndex.scanProbed]] over sign-bit signatures of
+    * ONLY the probed lists' rows (joined to the query's signature) —
     * at 100 TB the probed scan reads 8 bytes per 64 dims per candidate
     * and nothing else. With nprobe = nlist this equals [[knnBinary]]
     * exactly (test-pinned; the ivfSearchQuantized contract). */
@@ -215,20 +201,13 @@ object Quantization {
     val index = IvfIndex.forEmbeddings(spark, sfDir, nlist)
     val emb = Tables.embeddings(spark, sfDir)
     val dim = emb.select(size(col("embedding"))).head.getInt(0)
-    val q = emb.filter(col("vec_id") === queryId)
-      .select(col("embedding")).head.getSeq[Float](0).toArray
-    val probed = IvfIndex.probeLists(index, q, nprobe)
+    val q = Tables.queryVector(spark, sfDir, queryId)
     val qSig = emb.filter(col("vec_id") === queryId)
       .select(binarySigExpr(dim).as("q_sig"))
-    index.postings
-      .filter(col("list_id").isin(probed: _*))
-      .filter(col("id") =!= queryId)
-      .select(col("id").as("vec_id"), binarySigExpr(dim).as("sig"))
-      .join(broadcast(qSig))
-      .withColumn("hamming", hammingExpr)
-      .orderBy(col("hamming").asc, col("vec_id").asc)
-      .limit(k)
-      .select(col("vec_id"), col("hamming"))
+    IvfIndex.scanProbed(index.postings, IvfIndex.probeLists(index, q, nprobe),
+      hammingExpr, "hamming", IvfIndex.TopK(k), excludeId = Some(queryId),
+      idAs = "vec_id",
+      within = _.withColumn("sig", binarySigExpr(dim)).join(broadcast(qSig)))
   }
 
   /** Recall@k of the binary paths against exact L2 — the probe a user

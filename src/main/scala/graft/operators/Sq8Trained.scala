@@ -110,9 +110,7 @@ object Sq8Trained {
   def knn(spark: SparkSession, sfDir: String, queryId: Long = 0L,
           k: Int = 10): DataFrame = {
     val model = train(spark, sfDir)
-    val q = Tables.embeddings(spark, sfDir)
-      .filter(col("vec_id") === queryId)
-      .select("embedding").head.getSeq[Float](0).toArray
+    val q = Tables.queryVector(spark, sfDir, queryId)
     val lut = Array.tabulate(model.dim) { i =>
       Array.tabulate(256) { c =>
         val d = model.vmin(i) + (c / 255.0) * model.vdiff(i) - q(i).toDouble

@@ -41,9 +41,7 @@ private[graft] object VectorIndexRegistry {
     // this must equal the exact scan (reference semantics,
     // app.py:47-48,55) — its oracle is the exact-kNN SQL.
     "ivf_search_full" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val q = Tables.embeddings(s, d).filter(col("vec_id") === 0L)
-        .select("embedding").head.getSeq[Float](0).toArray
+      val q = Tables.queryVector(s, d, 0L)
       IvfIndex.search(IvfIndex.forEmbeddings(s, d, nlist = 4), q,
           k = 10, nprobe = 4, excludeId = Some(0L))
         .withColumnRenamed("id", "vec_id")
@@ -74,9 +72,7 @@ private[graft] object VectorIndexRegistry {
     // --- persisted-index lifecycle (S3/S4, app.py:116-147): search
     // runs against the partitionBy(list_id) parquet layout on disk ---
     "ivf_persisted_search" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val q = Tables.embeddings(s, d).filter(col("vec_id") === 0L)
-        .select("embedding").head.getSeq[Float](0).toArray
+      val q = Tables.queryVector(s, d, 0L)
       IvfIndex.search(IvfIndex.persistedForEmbeddings(s, d, nlist = 4), q,
           k = 10, nprobe = 4, excludeId = Some(0L))
         .withColumnRenamed("id", "vec_id")
@@ -92,9 +88,7 @@ private[graft] object VectorIndexRegistry {
     // (IVFFlat stores raw vectors) this equals the exact range search —
     // its oracle is the same all-pairs ε SQL
     "range_search_ivf" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val q = Tables.embeddings(s, d).filter(col("vec_id") === 0L)
-        .select("embedding").head.getSeq[Float](0).toArray
+      val q = Tables.queryVector(s, d, 0L)
       IvfIndex.rangeSearch(IvfIndex.persistedForEmbeddings(s, d, nlist = 4), q,
           eps = 1.6, nprobe = 4, excludeId = Some(0L))
         .withColumnRenamed("id", "vec_id")
@@ -114,9 +108,7 @@ private[graft] object VectorIndexRegistry {
     // IP-metric IVF at nprobe = nlist scans every list (raw vectors),
     // so it equals the exact MIPS scan — same oracle SQL
     "knn_ip_ivf" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val q = Tables.embeddings(s, d).filter(col("vec_id") === 0L)
-        .select("embedding").head.getSeq[Float](0).toArray
+      val q = Tables.queryVector(s, d, 0L)
       IpSearch.searchIp(IpSearch.forEmbeddingsIp(s, d, nlist = 4), q,
           k = 10, nprobe = 4, excludeId = Some(0L))
         .withColumnRenamed("id", "vec_id")
@@ -129,9 +121,7 @@ private[graft] object VectorIndexRegistry {
     // the metric lives in the kernels, not the storage); nprobe =
     // nlist ≡ the exact MIPS scan, same oracle
     "knn_ip_persisted" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val q = Tables.embeddings(s, d).filter(col("vec_id") === 0L)
-        .select("embedding").head.getSeq[Float](0).toArray
+      val q = Tables.queryVector(s, d, 0L)
       IpSearch.searchIp(IpSearch.persistedForEmbeddingsIp(s, d, nlist = 4), q,
           k = 10, nprobe = 4, excludeId = Some(0L))
         .withColumnRenamed("id", "vec_id")
@@ -153,9 +143,7 @@ private[graft] object VectorIndexRegistry {
     // recipe): unit-trained quantizer, raw vectors scored by
     // cosine_sim, nprobe = nlist ≡ the exact cosine scan bit-for-bit
     "knn_cosine_ivf" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val q = Tables.embeddings(s, d).filter(col("vec_id") === 0L)
-        .select("embedding").head.getSeq[Float](0).toArray
+      val q = Tables.queryVector(s, d, 0L)
       CosineIvf.search(CosineIvf.forEmbeddings(s, d, nlist = 4), q,
           k = 10, nprobe = 4, excludeId = Some(0L))
         .withColumnRenamed("id", "vec_id")
@@ -166,8 +154,7 @@ private[graft] object VectorIndexRegistry {
     "search_reconstruct" -> ((s, d) => {
       import org.apache.spark.sql.functions._
       val emb = Tables.embeddings(s, d)
-      val q = emb.filter(col("vec_id") === 0L)
-        .select("embedding").head.getSeq[Float](0).toArray
+      val q = Tables.queryVector(s, d, 0L)
       val res = IvfIndex.searchAndReconstruct(
         IvfIndex.persistedForEmbeddings(s, d, nlist = 4), q,
         k = 10, nprobe = 4, excludeId = Some(0L))
@@ -230,9 +217,7 @@ private[graft] object VectorIndexRegistry {
     // vec_id-mod-2 partition of the corpus; per-shard top-k merge at
     // nprobe = nlist ≡ the exact global scan ---
     "sharded_search" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val q = Tables.embeddings(s, d).filter(col("vec_id") === 0L)
-        .select("embedding").head.getSeq[Float](0).toArray
+      val q = Tables.queryVector(s, d, 0L)
       IvfIndex.searchShards(IvfIndex.shardsForEmbeddings(s, d, nShards = 2, nlist = 2),
           q, k = 10, nprobe = 2, excludeId = Some(0L))
         .withColumnRenamed("id", "vec_id")
@@ -247,8 +232,7 @@ private[graft] object VectorIndexRegistry {
     // postings scan; nprobe = nlist ≡ the exact filtered scan
     "knn_filtered_ivf" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
-      val q = Tables.embeddings(s, d).filter(col("vec_id") === 0L)
-        .select("embedding").head.getSeq[Float](0).toArray
+      val q = Tables.queryVector(s, d, 0L)
       IvfIndex.searchFiltered(IvfIndex.persistedForEmbeddings(s, d, nlist = 4),
           q, k = 10, nprobe = 4,
           sel = col("id") >= 100L && col("id") < 400L, excludeId = Some(0L))
@@ -259,8 +243,7 @@ private[graft] object VectorIndexRegistry {
     "knn_filtered_meta" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
       val emb = Tables.embeddings(s, d)
-      val q = emb.filter(col("vec_id") === 0L)
-        .select("embedding").head.getSeq[Float](0).toArray
+      val q = Tables.queryVector(s, d, 0L)
       IvfIndex.searchFilteredBy(IvfIndex.persistedForEmbeddings(s, d, nlist = 4),
           q, k = 10, nprobe = 4, meta = emb, metaIdCol = "vec_id",
           pred = col("label") === 1, excludeId = Some(0L))
@@ -272,9 +255,7 @@ private[graft] object VectorIndexRegistry {
     // --- remove_ids (FAISS IndexIVF.remove_ids): tombstone log +
     // read-side anti-join; nprobe = nlist ≡ exact over survivors ---
     "ivf_remove_search" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val q = Tables.embeddings(s, d).filter(col("vec_id") === 0L)
-        .select("embedding").head.getSeq[Float](0).toArray
+      val q = Tables.queryVector(s, d, 0L)
       IvfIndex.search(IvfIndex.removedForEmbeddings(s, d, compacted = false),
           q, k = 10, nprobe = 4, excludeId = Some(0L))
         .withColumnRenamed("id", "vec_id")
@@ -282,9 +263,7 @@ private[graft] object VectorIndexRegistry {
     // same removal folded into a physical compaction (tombstone log
     // cleared, postings rewritten) — identical result by contract
     "ivf_remove_compacted" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val q = Tables.embeddings(s, d).filter(col("vec_id") === 0L)
-        .select("embedding").head.getSeq[Float](0).toArray
+      val q = Tables.queryVector(s, d, 0L)
       IvfIndex.search(IvfIndex.removedForEmbeddings(s, d, compacted = true),
           q, k = 10, nprobe = 4, excludeId = Some(0L))
         .withColumnRenamed("id", "vec_id")
@@ -293,9 +272,7 @@ private[graft] object VectorIndexRegistry {
     // sharing one quantizer merged by pure file motion; nprobe = nlist
     // over the merged index ≡ exact over the whole corpus ---
     "ivf_merge_search" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val q = Tables.embeddings(s, d).filter(col("vec_id") === 0L)
-        .select("embedding").head.getSeq[Float](0).toArray
+      val q = Tables.queryVector(s, d, 0L)
       IvfIndex.search(IvfIndex.mergedForEmbeddings(s, d),
           q, k = 10, nprobe = 4, excludeId = Some(0L))
         .withColumnRenamed("id", "vec_id")

@@ -18,7 +18,7 @@ class ClusteringSpec extends SparkSpec {
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
     (0 until n).map { i =>
-      var r = find(i)
+      val r = find(i)
       i.toLong -> r.toLong
     }.toMap
   }

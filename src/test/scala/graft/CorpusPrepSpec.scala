@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.CorpusPrep
-import org.apache.spark.sql.functions._
 
 /** PII scrubbing and context-window chunking over planted documents. */
 class CorpusPrepSpec extends SparkSpec {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.{CurationScorecard, NbClassifier, NgramLm, SpanDedup, TextAnalytics}
 import graft.sources.Ingest
 

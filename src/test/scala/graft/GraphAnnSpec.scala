@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{GraphAnn, VectorSearchOps}
+import graft.operators.{GraphAnn, GraphAnnOracles, VectorSearchOps}
 
 /** Graph-ANN (the HNSW-family answer) contracts: NN-descent graph
   * quality vs the exact k-NN graph, beam-search recall vs the exact
@@ -47,7 +47,7 @@ class GraphAnnSpec extends SparkSpec {
     def key(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val fused = GraphAnn.descend(base, init, kb = 20, iters = 3, rho = 1.0, seed = 42L)
-    val legacy = GraphAnn.descendLegacy(base, init, kb = 20, iters = 3, rho = 1.0, seed = 42L)
+    val legacy = GraphAnnOracles.descendLegacy(base, init, kb = 20, iters = 3, rho = 1.0, seed = 42L)
     assert(key(fused) == key(legacy), "descent kernel drift")
     fused.unpersist(blocking = false)
     legacy.unpersist(blocking = false)

@@ -165,7 +165,6 @@ class IndexMaintenanceSpec extends SparkSpec {
 
   test("appendStream maintenance cadence: drift crossing the share bound promotes a new generation mid-stream") {
     import spark.implicits._
-    val dim = 4
     def vec(base: Float, i: Int): Array[Float] =
       Array(base + (i % 7) * 0.05f, base - (i % 5) * 0.04f,
         (i % 3) * 0.03f, (i % 11) * 0.02f)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.IvfIndex
 
 /** IVF index contract vs a driver-side brute-force oracle (SURVEY.md

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.IvfIndex
 
 /** The closed §7.5 maintenance loop: [[IvfIndex.maintainIndex]] must

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, MinhashIndex}
 
 /** Persisted MinHash-LSH index (see MinhashIndex scaladoc): probing a

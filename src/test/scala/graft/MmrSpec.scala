@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Mmr, VectorSearchOps}
-import org.apache.spark.sql.functions._
 
 /** MMR diversity re-rank: greedy contract, determinism, and the
   * diversity behavior itself on a constructed corpus. */

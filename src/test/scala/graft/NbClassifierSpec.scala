@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import graft.operators.NbClassifier
 
 /** Multinomial NB classifier (see NbClassifier scaladoc): the model's

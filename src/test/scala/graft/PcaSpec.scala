@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 /** PCA pre-transform: eigensolver correctness, model invariants, and
   * the shortlist + exact re-rank search contract. */
 class PcaSpec extends SparkSpec {
-  import spark.implicits._
 
   test("jacobiEigen recovers a known 2x2 spectrum") {
     // [[2,1],[1,2]] has eigenvalues 3 (v=(1,1)/√2) and 1 (v=(1,-1)/√2)

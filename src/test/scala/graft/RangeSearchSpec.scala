@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.{IndexAudits, IvfIndex, VectorSearchOps}
 
 /** Per-query ε range search (FAISS `range_search`; the reference's P3

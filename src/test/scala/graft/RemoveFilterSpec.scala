@@ -158,7 +158,7 @@ class RemoveFilterSpec extends SparkSpec {
   // ---- merge_from ----------------------------------------------------------
 
   test("mergeFrom moves every vector once, empties the other index, and carries tombstones") {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Paths
     val emb = Tables.embeddings(spark, sfSmall)
     val full = IvfIndex.build(emb, "vec_id", "embedding", nlist = 4)
     val dirA = tmpDir("merge-a-")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.{Sq8Trained, VectorSearchOps}
 
 /** Contracts for the trained per-dimension QT_8bit scalar quantizer:

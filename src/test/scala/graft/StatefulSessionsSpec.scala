@@ -22,7 +22,6 @@ class StatefulSessionsSpec extends SparkSpec {
   }
 
   test("merge: out-of-order arrivals join open state sessions transitively") {
-    val gap = 30L * 60 * 1000000
     val t = 1000000L
     // open session [t, t+10m]; arrivals at t+35m and t+20m — the t+20m
     // event bridges: all three merge into one session

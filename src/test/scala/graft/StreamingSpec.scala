@@ -231,7 +231,7 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-stream join matches across micro-batch boundaries (click and purchase in different batches)") {
     import spark.implicits._
-    import graft.streaming.{ClickAttribution, EventsStreaming}
+    import graft.streaming.EventsStreaming
     val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     def at(min: Int) = new java.sql.Timestamp(t0.getTime + min * 60000L)
     val dir = tmpDir("ss-join-")
@@ -269,7 +269,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("readEvents stage self-heals a dangling symlink and links absolutely") {
-    import java.nio.file.{Files, Paths, LinkOption}
+    import java.nio.file.{Files, Paths}
     // a RELATIVE sfDir under repo root, so the old staging bug
     // (link target taken verbatim → dangling relative link that
     // exists() then reports absent while createSymbolicLink throws

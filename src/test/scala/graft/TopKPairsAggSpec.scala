@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.GraphAnn
+import graft.operators.{GraphAnn, GraphAnnOracles}
 
 /** [[graft.functions.TopKPairs]] (the bounded top-k aggregate behind
   * `GraphAnn.topKPerSrc`) must be bit-identical to the collect_list +
@@ -18,7 +18,7 @@ class TopKPairsAggSpec extends SparkSpec {
 
   private def check(edges: DataFrame, k: Int): Unit = {
     val neu = rows(GraphAnn.topKPerSrc(edges, k))
-    val old = rows(GraphAnn.topKPerSrcLegacy(edges, k))
+    val old = rows(GraphAnnOracles.topKPerSrcLegacy(edges, k))
     assert(neu == old, s"top-k aggregate drift at k=$k")
   }
 

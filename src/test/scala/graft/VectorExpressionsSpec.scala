@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.functions._
 
 /** The codegen'd vector kernels vs independent reference computations

@@ -14,7 +14,7 @@ object ProbeShim {
     GraphAnn.descend(base, init, kb, iters, rho, seed)
   def descendLegacy(base: DataFrame, init: DataFrame, kb: Int, iters: Int,
                     rho: Double, seed: Long): DataFrame =
-    GraphAnn.descendLegacy(base, init, kb, iters, rho, seed)
+    GraphAnnOracles.descendLegacy(base, init, kb, iters, rho, seed)
   def exactGraphTwin(spark: org.apache.spark.sql.SparkSession,
                      sfDir: String): DataFrame =
     GraphAnn.exactGraphTwin(spark, sfDir)
@@ -31,7 +31,7 @@ object ProbeShim {
   def topKPerSrc(edges: DataFrame, k: Int): DataFrame =
     GraphAnn.topKPerSrc(edges, k)
   def topKPerSrcLegacy(edges: DataFrame, k: Int): DataFrame =
-    GraphAnn.topKPerSrcLegacy(edges, k)
+    GraphAnnOracles.topKPerSrcLegacy(edges, k)
   def hopScan(spark: org.apache.spark.sql.SparkSession, graph: DataFrame,
               frontier: Seq[Long], bucketOf: Option[Long => Int]): DataFrame =
     GraphAnn.hopScan(spark, graph, frontier, bucketOf)
