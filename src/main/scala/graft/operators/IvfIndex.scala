@@ -22,11 +22,26 @@ import graft.functions.l2sq
   *
   * Scale posture: train samples/aggregates via MLlib (distributed
   * Lloyd's); assignment is a broadcast nested-loop against ≤`nlist`
-  * centroids (tiny); search scans only the probed partitions — at 100
-  * TB a query touches `nprobe/nlist` of the data instead of all of it,
-  * exactly the reference's pruning ratio.
+  * centroids (tiny). Batch search ([[searchAll]]) and the filtered
+  * searches scan only the probed partitions — at 100 TB a query touches
+  * `nprobe/nlist` of the data instead of all of it, exactly the
+  * reference's pruning ratio. Single-query search ([[search]],
+  * [[searchAndReconstruct]], [[rangeSearch]]) answers from the index's
+  * serving handle ([[IvfServing]]): the postings packed per list, read
+  * once per `Index`, held on the driver below
+  * [[MaxDriverServingBytes]] (no Spark job per query) and in a cached
+  * RDD with one partition per list above it (one job over the probed
+  * lists per query).
   */
 object IvfIndex {
+
+  /** Byte bound of the serving handle's driver placement: postings
+    * packed as 8 bytes of id plus `4 · dim` bytes of vector. Below it a
+    * single-query search runs no Spark job; above it the packed lists
+    * stay in executors and a search is one job over the probed lists.
+    * 32 MiB keeps 20,000 × 64 (5.3 MB) and smaller indexes on the driver
+    * and sends 500,000 × 64 (132 MB) to the cached RDD. */
+  val MaxDriverServingBytes: Long = 32L << 20
 
   case class Index(centroids: DataFrame, postings: DataFrame) {
     /** Driver-side centroid matrix for nprobe selection (≤ nlist rows —
@@ -34,6 +49,20 @@ object IvfIndex {
     lazy val centroidArrays: Array[(Int, Array[Float])] =
       centroids.select("list_id", "centroid").collect()
         .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
+
+    @transient private var handle: IvfServing = null
+
+    /** The serving handle, opened by the first single-query search on
+      * this object and kept for its lifetime. It reads `postings` as
+      * this object sees it, so it shares the file listing a loaded index
+      * fixed when it was created and never outlives that generation.
+      * `maxDriverBytes` only matters on the first call (specs force a
+      * placement with it). */
+    private[graft] def serving(maxDriverBytes: Long = MaxDriverServingBytes): IvfServing =
+      synchronized {
+        if (handle == null) handle = IvfServing.open(this, maxDriverBytes)
+        handle
+      }
   }
 
   /** Train + assign (reference app.py:47-56). `df` must carry
@@ -150,15 +179,19 @@ object IvfIndex {
       .take(nprobe).map(_._1).toSeq
   }
 
-  /** How [[scanProbed]] cuts its ranked candidates: the first `k`, or
-    * every candidate scoring strictly below `eps` (range search). */
+  /** How [[scanProbed]] and the serving handle cut their ranked
+    * candidates: the first `k`, or every candidate scoring strictly
+    * below `eps` (range search). */
   private[graft] sealed trait Cut
-  private[graft] final case class TopK(k: Int) extends Cut
+  private[graft] final case class TopK(k: Int) extends Cut {
+    require(k >= 0, s"k must be >= 0, got $k")
+  }
   private[graft] final case class Below(eps: Double) extends Cut
 
-  /** The probed-list scan every IVF-family search runs (the reference's
-    * coarse-probe → scan → top-k, app.py:58-75). Its contract, stated
-    * here once:
+  /** The probed-list scan every IVF-family DataFrame search runs (the
+    * reference's coarse-probe → scan → top-k, app.py:58-75). Its
+    * contract, stated here once (the serving handle behind [[search]],
+    * [[searchAndReconstruct]] and [[rangeSearch]] keeps it too):
     *
     *  - pruning: only postings whose `list_id` is in `probed` are read —
     *    on a parquet-backed index a static partition filter, so a query
@@ -195,40 +228,55 @@ object IvfIndex {
     ranked.select(id +: col(scoreAs) +: keep.map(col): _*)
   }
 
-  /** IVF search (reference app.py:58-75): [[probeLists]], then
-    * [[scanProbed]] scoring exact squared L2. Returns (id, dist). */
+  /** IVF search (reference app.py:58-75): [[probeLists]], then the
+    * `(dist, id)` top-k of exact squared L2 over the probed lists, with
+    * [[scanProbed]]'s contract. Answered from the index's serving handle
+    * ([[IvfServing]], opened by the first search on this `Index`): with
+    * the handle on the driver a search runs no Spark job; in its cached
+    * RDD a search runs one job with one task per probed list. The result
+    * is a local DataFrame of (id, dist). `k < 0` fails with
+    * `IllegalArgumentException`. */
   def search(index: Index, q: Array[Float], k: Int, nprobe: Int,
              excludeId: Option[Long] = None): DataFrame =
-    scanProbed(index.postings, probeLists(index, q, nprobe),
-      l2sq(col("embedding"), typedlit(q)), "dist", TopK(k),
-      excludeId = excludeId)
+    served(index, q, TopK(k), nprobe, excludeId, withVecs = false, "IvfIndex.search")
 
   /** FAISS `search_and_reconstruct`: top-k search that returns the
     * STORED vectors alongside ids and distances — the one-call form a
     * retrieval pipeline uses when the hit payload is needed (rerank by
     * a second model, context assembly) without a second index
     * round-trip. For IVFFlat the stored vector IS the original, so no
-    * join back to the source table is needed: the plan is [[search]]'s
-    * plus one projected column. Returns (id, dist, embedding). */
+    * join back to the source table is needed: it is [[search]] with
+    * each hit's packed vector copied out. Returns (id, dist, embedding). */
   def searchAndReconstruct(index: Index, q: Array[Float], k: Int, nprobe: Int,
                            excludeId: Option[Long] = None): DataFrame =
-    scanProbed(index.postings, probeLists(index, q, nprobe),
-      l2sq(col("embedding"), typedlit(q)), "dist", TopK(k),
-      excludeId = excludeId, keep = Seq("embedding"))
+    served(index, q, TopK(k), nprobe, excludeId, withVecs = true,
+      "IvfIndex.searchAndReconstruct")
 
   /** IVF range search (FAISS `IndexIVF.range_search`): the strict
     * `dist < eps` predicate (app.py:93's P3 semantics from a single
     * query) over the probed lists — [[search]] with the top-k replaced
-    * by the ε cut. `nprobe = nlist` probes every list and, because
-    * IVFFlat stores raw vectors, reproduces
-    * [[VectorSearchOps.rangeSearch]] bit-for-bit (the registered
-    * `range_search_ivf` contract); `nprobe < nlist` returns a subset
-    * whose distances are still exact. */
+    * by the ε cut, answered from the same serving handle. `nprobe =
+    * nlist` probes every list and, because IVFFlat stores raw vectors,
+    * reproduces [[VectorSearchOps.rangeSearch]] bit-for-bit (the
+    * registered `range_search_ivf` contract); `nprobe < nlist` returns a
+    * subset whose distances are still exact. */
   def rangeSearch(index: Index, q: Array[Float], eps: Double, nprobe: Int,
                   excludeId: Option[Long] = None): DataFrame =
-    scanProbed(index.postings, probeLists(index, q, nprobe),
-      l2sq(col("embedding"), typedlit(q)), "dist", Below(eps),
-      excludeId = excludeId)
+    served(index, q, Below(eps), nprobe, excludeId, withVecs = false,
+      "IvfIndex.rangeSearch")
+
+  /** Ranked hits of one query from the index's serving handle. */
+  private def servedHits(index: Index, q: Array[Float], cut: Cut, nprobe: Int,
+                         excludeId: Option[Long], withVecs: Boolean,
+                         what: String): Seq[Hit] = {
+    val probed = probeLists(index, q, nprobe)
+    index.serving().hits(q, probed, cut, excludeId, withVecs, what)
+  }
+
+  private def served(index: Index, q: Array[Float], cut: Cut, nprobe: Int,
+                     excludeId: Option[Long], withVecs: Boolean, what: String): DataFrame =
+    IvfServing.frame(index.postings.sparkSession,
+      servedHits(index, q, cut, nprobe, excludeId, withVecs, what), withVecs)
 
   /** Filtered IVF search — FAISS `SearchParameters(sel=IDSelector)`
     * (the search-time subset restriction the reference's stack exposes
@@ -675,7 +723,8 @@ object IvfIndex {
     * every reader should use once removals exist. The tombstone side
     * of the anti-join is small until compaction debt builds (AQE
     * broadcasts it); the postings side keeps partition pruning because
-    * `list_id` predicates sit on the scan below the join. */
+    * `list_id` predicates sit on the scan below the join. The serving
+    * handle of the returned index applies the anti-join once, at open. */
   def loadLive(spark: SparkSession, dir: String): Index = {
     import java.nio.file.{Files, Paths}
     val idx = load(spark, dir)
@@ -787,20 +836,22 @@ object IvfIndex {
     * top-k lists merge into one global top-k). The 100 TB posture this
     * models: a corpus ingested as N generations/slices, each trained
     * and persisted independently, queried WITHOUT the re-bucketing
-    * cost of [[mergeFrom]] — the merge is k·S rows, driver-free, and
-    * each shard search keeps its own partition pruning. Distances are
+    * cost of [[mergeFrom]] — the merge is k·S rows on the driver, and
+    * each shard searches only its own probed lists. Distances are
     * exact per shard (IVFFlat raw vectors), so with `nprobe = nlist`
     * on every shard the merged result over a shard-PARTITIONED corpus
     * equals the exact global scan bit-for-bit: each shard's top-k is
     * complete for its slice, and the global top-k is a subset of the
-    * union of slice top-ks. */
+    * union of slice top-ks. Each shard answers from its own serving
+    * handle and the driver merges the k·S hits by `(dist, id)`. */
   def searchShards(indexes: Seq[Index], q: Array[Float], k: Int, nprobe: Int,
                    excludeId: Option[Long] = None): DataFrame = {
     require(indexes.nonEmpty, "searchShards: no shards")
-    indexes.map(ix => search(ix, q, k, nprobe, excludeId))
-      .reduce(_ union _)
-      .orderBy(col("dist").asc, col("id").asc)
-      .limit(k)
+    val cut = TopK(k)
+    val hits = indexes.flatMap(ix =>
+      servedHits(ix, q, cut, nprobe, excludeId, withVecs = false, "IvfIndex.searchShards"))
+    IvfServing.frame(indexes.head.postings.sparkSession,
+      IvfServing.merge(hits, cut), withVecs = false)
   }
 
   private val shardCache = JvmCaches.sessionMap[(String, Int, Int), Seq[Index]]()
@@ -951,11 +1002,11 @@ object IvfIndex {
 
   /** The reference's full persistence lifecycle (save → load → search,
     * app.py:116-147) as one memoized step: build the sf index, save it
-    * partitionBy(list_id), and return the DISK-backed index — searches
-    * against it scan the parquet postings with partition pruning, the
-    * layout the 100 TB design claims (scaladoc above). Unlike
-    * [[forEmbeddings]] nothing is cached in memory: every search is an
-    * honest pruned file scan. */
+    * partitionBy(list_id), and return the DISK-backed index — the
+    * filtered searches scan the parquet postings with partition
+    * pruning, the layout the 100 TB design claims (scaladoc above), and
+    * the serving handle of single-query search is read from those
+    * files. Unlike [[forEmbeddings]] the postings frame is not cached. */
   def persistedForEmbeddings(spark: SparkSession, sfDir: String, nlist: Int): Index =
     persistedCache.getOrElseUpdate(spark, (sfDir, nlist)) {
       val dir = s"/root/repo/target/ivf-index/${new java.io.File(sfDir).getName}-nlist$nlist"

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.lit
 import graft.operators.IvfIndex
 
 /** IVF index contract vs a driver-side brute-force oracle (SURVEY.md
@@ -95,10 +96,28 @@ class IvfIndexSpec extends SparkSpec {
     // the partition-pruning design claim (IvfIndex scaladoc): an
     // nprobe<nlist search over the loaded postings must push the
     // list_id predicate into PartitionFilters at the parquet scan.
-    val prunedPlan = IvfIndex.search(loaded, q, 10, 2, Some(qid))
+    // Single-query search answers from the serving handle; the filtered
+    // search keeps the pruned DataFrame scan.
+    val prunedPlan = IvfIndex.searchFiltered(loaded, q, 10, 2, lit(true), Some(qid))
       .queryExecution.executedPlan.toString
     assert(prunedPlan.contains("PartitionFilters: [list_id"),
       s"expected PartitionFilters on list_id in:\n$prunedPlan")
+
+    // the serving-handle claim: with the packed lists on the driver a
+    // search runs no Spark job; in the cached RDD it runs one job with
+    // one task per probed list
+    val onDriver = IvfIndex.load(spark, dir)
+    val inRdd = IvfIndex.load(spark, dir)
+    assert(onDriver.serving().placementName == "driver")
+    assert(inRdd.serving(maxDriverBytes = 0L).placementName == "rdd")
+    val probe = new JobProbe(spark, "ivf-index-spec-")
+    try {
+      probe.in("driver")(IvfIndex.search(onDriver, q, 10, 2, Some(qid)).collect())
+      probe.in("rdd")(IvfIndex.search(inRdd, q, 10, 2, Some(qid)).collect())
+      assert(probe.jobs("driver").isEmpty)
+      assert(probe.jobs("rdd").size == 1)
+      assert(probe.tasks("rdd") == 2)
+    } finally probe.close()
   }
 
   test("sampled training (maxTrainRows) still assigns every row and stays exact at full probe") {
