@@ -27,20 +27,20 @@ import graft.functions.l2sq
   * `nprobe/nlist` of the data instead of all of it, exactly the
   * reference's pruning ratio. Single-query search ([[search]],
   * [[searchAndReconstruct]], [[rangeSearch]]) answers from the index's
-  * serving handle ([[IvfServing]]): the postings packed per list, read
-  * once per `Index`, held on the driver below
-  * [[MaxDriverServingBytes]] (no Spark job per query) and in a cached
-  * RDD with one partition per list above it (one job over the probed
-  * lists per query).
+  * serving handle ([[IvfServing]]) when its postings fit
+  * [[MaxDriverServingBytes]]: the postings packed per list in the
+  * driver heap, read once per `Index`, so a query runs no Spark job.
+  * Above that bound it keeps the pruned scan.
   */
 object IvfIndex {
 
-  /** Byte bound of the serving handle's driver placement: postings
-    * packed as 8 bytes of id plus `4 · dim` bytes of vector. Below it a
-    * single-query search runs no Spark job; above it the packed lists
-    * stay in executors and a search is one job over the probed lists.
-    * 32 MiB keeps 20,000 × 64 (5.3 MB) and smaller indexes on the driver
-    * and sends 500,000 × 64 (132 MB) to the cached RDD. */
+  /** Byte bound of the serving handle: postings packed as 8 bytes of id
+    * plus `4 · dim` bytes of vector. At or below it a single-query
+    * search answers from the packed lists in the driver heap and runs no
+    * Spark job; above it the search is the pruned DataFrame scan, which
+    * reads `nprobe/nlist` of the postings per query. 32 MiB serves
+    * 20,000 × 64 (5.3 MB) and smaller indexes from the driver and keeps
+    * 500,000 × 64 (132 MB) on the scan. */
   val MaxDriverServingBytes: Long = 32L << 20
 
   case class Index(centroids: DataFrame, postings: DataFrame) {
@@ -50,19 +50,16 @@ object IvfIndex {
       centroids.select("list_id", "centroid").collect()
         .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
 
-    @transient private var handle: IvfServing = null
-
-    /** The serving handle, opened by the first single-query search on
-      * this object and kept for its lifetime. It reads `postings` as
-      * this object sees it, so it shares the file listing a loaded index
-      * fixed when it was created and never outlives that generation.
-      * `maxDriverBytes` only matters on the first call (specs force a
-      * placement with it). */
-    private[graft] def serving(maxDriverBytes: Long = MaxDriverServingBytes): IvfServing =
-      synchronized {
-        if (handle == null) handle = IvfServing.open(this, maxDriverBytes)
-        handle
-      }
+    /** The serving handle ([[IvfServing.open]] under
+      * [[MaxDriverServingBytes]]), opened by the first single-query
+      * search on this object and kept for its lifetime; None when the
+      * index searches by the pruned scan. It reads `postings` as this
+      * object sees it, so it shares the file listing a loaded index
+      * fixed when it was created and never outlives that generation. Its
+      * packed lists stay in the driver heap as long as this object is
+      * reachable. */
+    @transient private[graft] lazy val serving: Option[IvfServing] =
+      IvfServing.open(this, MaxDriverServingBytes)
   }
 
   /** Train + assign (reference app.py:47-56). `df` must carry
@@ -231,14 +228,15 @@ object IvfIndex {
   /** IVF search (reference app.py:58-75): [[probeLists]], then the
     * `(dist, id)` top-k of exact squared L2 over the probed lists, with
     * [[scanProbed]]'s contract. Answered from the index's serving handle
-    * ([[IvfServing]], opened by the first search on this `Index`): with
-    * the handle on the driver a search runs no Spark job; in its cached
-    * RDD a search runs one job with one task per probed list. The result
-    * is a local DataFrame of (id, dist). `k < 0` fails with
-    * `IllegalArgumentException`. */
+    * ([[Index.serving]], opened by the first search on this `Index`)
+    * when there is one: the search runs no Spark job and the result is
+    * a local DataFrame of (id, dist), `id` a long. Otherwise (postings
+    * above [[MaxDriverServingBytes]], or an id that is not a long) it is
+    * the [[scanProbed]] plan, with `id` of the index's own type. `k < 0`
+    * fails with `IllegalArgumentException`. */
   def search(index: Index, q: Array[Float], k: Int, nprobe: Int,
              excludeId: Option[Long] = None): DataFrame =
-    served(index, q, TopK(k), nprobe, excludeId, withVecs = false, "IvfIndex.search")
+    served(index, q, TopK(k), nprobe, excludeId, withVecs = false)
 
   /** FAISS `search_and_reconstruct`: top-k search that returns the
     * STORED vectors alongside ids and distances — the one-call form a
@@ -246,37 +244,35 @@ object IvfIndex {
     * a second model, context assembly) without a second index
     * round-trip. For IVFFlat the stored vector IS the original, so no
     * join back to the source table is needed: it is [[search]] with
-    * each hit's packed vector copied out. Returns (id, dist, embedding). */
+    * each hit's stored vector kept. Returns (id, dist, embedding). */
   def searchAndReconstruct(index: Index, q: Array[Float], k: Int, nprobe: Int,
                            excludeId: Option[Long] = None): DataFrame =
-    served(index, q, TopK(k), nprobe, excludeId, withVecs = true,
-      "IvfIndex.searchAndReconstruct")
+    served(index, q, TopK(k), nprobe, excludeId, withVecs = true)
 
   /** IVF range search (FAISS `IndexIVF.range_search`): the strict
     * `dist < eps` predicate (app.py:93's P3 semantics from a single
     * query) over the probed lists — [[search]] with the top-k replaced
-    * by the ε cut, answered from the same serving handle. `nprobe =
+    * by the ε cut, answered the same way. `nprobe =
     * nlist` probes every list and, because IVFFlat stores raw vectors,
     * reproduces [[VectorSearchOps.rangeSearch]] bit-for-bit (the
     * registered `range_search_ivf` contract); `nprobe < nlist` returns a
     * subset whose distances are still exact. */
   def rangeSearch(index: Index, q: Array[Float], eps: Double, nprobe: Int,
                   excludeId: Option[Long] = None): DataFrame =
-    served(index, q, Below(eps), nprobe, excludeId, withVecs = false,
-      "IvfIndex.rangeSearch")
+    served(index, q, Below(eps), nprobe, excludeId, withVecs = false)
 
-  /** Ranked hits of one query from the index's serving handle. */
-  private def servedHits(index: Index, q: Array[Float], cut: Cut, nprobe: Int,
-                         excludeId: Option[Long], withVecs: Boolean,
-                         what: String): Seq[Hit] = {
-    val probed = probeLists(index, q, nprobe)
-    index.serving().hits(q, probed, cut, excludeId, withVecs, what)
-  }
-
+  /** One query answered from the index's serving handle, or by the
+    * pruned scan when it has none. */
   private def served(index: Index, q: Array[Float], cut: Cut, nprobe: Int,
-                     excludeId: Option[Long], withVecs: Boolean, what: String): DataFrame =
-    IvfServing.frame(index.postings.sparkSession,
-      servedHits(index, q, cut, nprobe, excludeId, withVecs, what), withVecs)
+                     excludeId: Option[Long], withVecs: Boolean): DataFrame = {
+    val probed = probeLists(index, q, nprobe)
+    index.serving match {
+      case Some(h) => IvfServing.frame(index.postings.sparkSession,
+        h.hits(q, probed, cut, excludeId, withVecs), withVecs)
+      case None => scanProbed(index.postings, probed, l2sq(col("embedding"), typedlit(q)),
+        "dist", cut, excludeId = excludeId, keep = if (withVecs) Seq("embedding") else Nil)
+    }
+  }
 
   /** Filtered IVF search — FAISS `SearchParameters(sel=IDSelector)`
     * (the search-time subset restriction the reference's stack exposes
@@ -724,7 +720,8 @@ object IvfIndex {
     * of the anti-join is small until compaction debt builds (AQE
     * broadcasts it); the postings side keeps partition pruning because
     * `list_id` predicates sit on the scan below the join. The serving
-    * handle of the returned index applies the anti-join once, at open. */
+    * handle of the returned index, when it has one, applies the
+    * anti-join once, at open. */
   def loadLive(spark: SparkSession, dir: String): Index = {
     import java.nio.file.{Files, Paths}
     val idx = load(spark, dir)
@@ -836,22 +833,30 @@ object IvfIndex {
     * top-k lists merge into one global top-k). The 100 TB posture this
     * models: a corpus ingested as N generations/slices, each trained
     * and persisted independently, queried WITHOUT the re-bucketing
-    * cost of [[mergeFrom]] — the merge is k·S rows on the driver, and
-    * each shard searches only its own probed lists. Distances are
+    * cost of [[mergeFrom]] — the merge is k·S rows, and each shard
+    * searches only its own probed lists. Distances are
     * exact per shard (IVFFlat raw vectors), so with `nprobe = nlist`
     * on every shard the merged result over a shard-PARTITIONED corpus
     * equals the exact global scan bit-for-bit: each shard's top-k is
     * complete for its slice, and the global top-k is a subset of the
-    * union of slice top-ks. Each shard answers from its own serving
-    * handle and the driver merges the k·S hits by `(dist, id)`. */
+    * union of slice top-ks. When every shard has a serving handle the
+    * driver merges their hits by `(dist, id)` and no Spark job runs;
+    * otherwise the shards' [[search]] frames are unioned and re-ranked. */
   def searchShards(indexes: Seq[Index], q: Array[Float], k: Int, nprobe: Int,
                    excludeId: Option[Long] = None): DataFrame = {
     require(indexes.nonEmpty, "searchShards: no shards")
     val cut = TopK(k)
-    val hits = indexes.flatMap(ix =>
-      servedHits(ix, q, cut, nprobe, excludeId, withVecs = false, "IvfIndex.searchShards"))
-    IvfServing.frame(indexes.head.postings.sparkSession,
-      IvfServing.merge(hits, cut), withVecs = false)
+    val handles = indexes.flatMap(_.serving)
+    if (handles.size == indexes.size) {
+      val hits = indexes.zip(handles).flatMap { case (ix, h) =>
+        h.hits(q, probeLists(ix, q, nprobe), cut, excludeId, withVecs = false) }
+      IvfServing.frame(indexes.head.postings.sparkSession,
+        IvfServing.merge(hits, cut), withVecs = false)
+    } else
+      indexes.map(ix => search(ix, q, k, nprobe, excludeId))
+        .reduce(_ union _)
+        .orderBy(col("dist").asc, col("id").asc)
+        .limit(k)
   }
 
   private val shardCache = JvmCaches.sessionMap[(String, Int, Int), Seq[Index]]()

@@ -2,12 +2,10 @@ package graft.operators
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
-import org.apache.spark.{Partitioner, SparkContext, SparkException}
-import org.apache.spark.rdd.RDD
+import org.apache.spark.{SparkContext, SparkException}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 import IvfIndex.{Below, Cut, TopK}
 
 /** One inverted list packed for scanning: the vector of `ids(i)` is
@@ -20,65 +18,26 @@ private[graft] final class PackedList(val ids: Array[Long], val vecs: Array[Floa
 private[graft] final case class Hit(id: Long, dist: Double, vec: Array[Float])
 
 /** The serving handle of one [[IvfIndex.Index]]: its postings packed per
-  * list, read once from the index's own `postings` frame, so the handle
-  * answers exactly as that frame would (the same file listing for a
-  * loaded index, the tombstone anti-join of [[IvfIndex.loadLive]]
-  * already applied). Single-query searches score the probed lists
-  * against it with no DataFrame plan.
-  *
-  * Placement, chosen at open from the packed size (8 bytes of id plus
-  * `4 · dim` bytes of vector per posting) against
-  * [[IvfIndex.MaxDriverServingBytes]]:
-  *  - driver: the packed lists live in the driver heap and a search runs
-  *    no Spark job;
-  *  - rdd: the packed lists live in a cached RDD
-  *    (`StorageLevel.MEMORY_AND_DISK`) with one partition per list. A
-  *    search runs one `runJob` over the probed lists' partitions only;
-  *    each task keeps its list's bounded top-k (or ε-range), and the
-  *    driver merges them by `(dist, id)`. The RDD is registered with
-  *    Spark's `ContextCleaner`: once the `Index` (and so this handle) is
-  *    garbage-collected, its cached blocks and the packing shuffle are
-  *    released.
+  * list in the driver heap, read once from the index's own `postings`
+  * frame, so the handle answers exactly as that frame would (the same
+  * file listing for a loaded index, the tombstone anti-join of
+  * [[IvfIndex.loadLive]] already applied). A single-query search scores
+  * the probed lists against it and runs no Spark job.
   *
   * Distances are accumulated in double over `(double)v_i − (double)q_i`,
   * the loop of [[graft.functions.L2Sq]], so every distance and every
   * `(dist, id)` rank is bit-identical to the `l2sq` DataFrame scan. */
-private[graft] final class IvfServing private (spark: SparkSession, dim: Int,
-                                               placement: IvfServing.Placement) {
+private[graft] final class IvfServing private (dim: Int, lists: Map[Int, PackedList]) {
   import IvfServing._
 
-  def placementName: String = placement match {
-    case OnDriver(_) => "driver"
-    case InRdd(_, _) => "rdd"
-  }
-
   /** The ranked hits of `q` over the `probed` lists, cut by `cut`,
-    * leaving out `excludeId`; `what` names the operator in the job
-    * description of an rdd-placement search. */
+    * leaving out `excludeId`. */
   def hits(q: Array[Float], probed: Seq[Int], cut: Cut, excludeId: Option[Long],
-           withVecs: Boolean, what: String): Seq[Hit] = {
-    val d = dim
-    val perList: Seq[Hit] = placement match {
-      case OnDriver(lists) =>
-        probed.flatMap(lists.get).flatMap(scan(_, d, q, cut, excludeId, withVecs))
-      case InRdd(rdd, partitionOf) =>
-        val sc = spark.sparkContext
-        describing(sc, s"$what nprobe=${probed.size} placement=rdd") {
-          sc.runJob(rdd,
-            (it: Iterator[PackedList]) => it.flatMap(scan(_, d, q, cut, excludeId, withVecs)).toArray,
-            probed.map(partitionOf))
-        }.toSeq.flatten
-    }
-    merge(perList, cut)
-  }
+           withVecs: Boolean): Seq[Hit] =
+    merge(probed.flatMap(lists.get).flatMap(scan(_, dim, q, cut, excludeId, withVecs)), cut)
 }
 
 private[graft] object IvfServing {
-
-  sealed trait Placement
-  final case class OnDriver(lists: Map[Int, PackedList]) extends Placement
-  final case class InRdd(rdd: RDD[PackedList], partitionOf: Map[Int, Int])
-    extends Placement
 
   /** Rank order of every IVF search: distance ascending, then id. */
   private val byDistId: Ordering[Hit] = (a: Hit, b: Hit) => {
@@ -86,47 +45,47 @@ private[graft] object IvfServing {
     if (c != 0) c else java.lang.Long.compare(a.id, b.id)
   }
 
-  /** Read `index.postings` once, check every row, pack it per list and
-    * place it: on the driver when the packed lists fit `maxDriverBytes`,
-    * else in a cached RDD partitioned exactly by list. A posting whose
-    * embedding is null or not of the centroid dimension fails here with
-    * `IllegalArgumentException` naming its id, whichever list it is in.
-    * Postings of a list with no centroid are never probed, so they are
-    * dropped. */
-  def open(index: IvfIndex.Index, maxDriverBytes: Long): IvfServing = {
-    val spark = index.postings.sparkSession
-    import spark.implicits._
-    val sc = spark.sparkContext
-    val cents = describing(sc, "IvfIndex serving open: centroids")(index.centroidArrays)
-    val lids = cents.map(_._1).sorted
-    val dim = cents.headOption.fold(0)(_._2.length)
-    val partitionOf = lids.zipWithIndex.toMap
-    // one pass over the postings (and the tombstone anti-join of a live
-    // index): check and pack each input partition, keep the packs, and
-    // size them before choosing where they go
-    val packs = index.postings.select(col("list_id"), col("id"), col("embedding"))
-      .as[(Int, Long, Array[Float])].rdd
-      .mapPartitions(it => pack(it.filter(r => partitionOf.contains(r._1)), dim).iterator)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val placement = try {
-      val n = describing(sc, "IvfIndex serving open: pack postings")(
-        rethrowBadInput(packs.map(_._2.ids.length.toLong).fold(0L)(_ + _)))
-      if (n * (8L + 4L * dim) <= maxDriverBytes) {
-        val all = describing(sc, s"IvfIndex serving open: $n postings, placement=driver")(
-          packs.collect())
-        OnDriver(all.groupBy(_._1).map { case (lid, ps) => lid -> concat(ps.map(_._2).toSeq) })
-      } else {
-        val rdd = packs
-          .partitionBy(new ListPartitioner(partitionOf))
-          .mapPartitions(it => Iterator(it.map(_._2).toSeq).filter(_.nonEmpty).map(concat),
-            preservesPartitioning = true)
-          .setName("IvfIndex serving lists")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        describing(sc, s"IvfIndex serving open: $n postings, placement=rdd")(rdd.count())
-        InRdd(rdd, partitionOf)
+  /** Open the handle of `index`, or None when the index is not served
+    * from one and its searches stay the pruned DataFrame scan:
+    *  - its postings do not carry `id` as a long and `embedding` as an
+    *    array of floats (the handle's packed types; the scan keeps any
+    *    id type the index was built with);
+    *  - its postings packed (8 bytes of id plus `4 · dim` bytes of
+    *    vector each) exceed `maxDriverBytes`. Only the count is read
+    *    then, so such an index still reads `nprobe/nlist` of its
+    *    postings per query.
+    * Otherwise every posting is read once, checked and packed per list:
+    * a posting whose embedding is null or not of the centroid dimension
+    * fails here with `IllegalArgumentException` naming its id, whichever
+    * list it is in. Postings of a list with no centroid are never
+    * probed, so they are dropped. */
+  def open(index: IvfIndex.Index, maxDriverBytes: Long): Option[IvfServing] = {
+    val postings = index.postings
+    val types = postings.schema.fields.map(f => f.name -> f.dataType).toMap
+    val packable = (types.get("id"), types.get("embedding")) match {
+      case (Some(LongType), Some(ArrayType(FloatType, _))) => true
+      case _ => false
+    }
+    if (!packable) None
+    else {
+      val spark = postings.sparkSession
+      import spark.implicits._
+      val sc = spark.sparkContext
+      val cents = describing(sc, "IvfIndex serving open: centroids")(index.centroidArrays)
+      val lids = cents.map(_._1).toSet
+      val dim = cents.headOption.fold(0)(_._2.length)
+      val n = describing(sc, "IvfIndex serving open: count postings")(postings.count())
+      if (n * (8L + 4L * dim) > maxDriverBytes) None
+      else {
+        val packs = describing(sc, s"IvfIndex serving open: pack $n postings")(rethrowBadInput(
+          postings.select(col("list_id"), col("id"), col("embedding"))
+            .as[(Int, Long, Array[Float])].rdd
+            .mapPartitions(it => pack(it.filter(r => lids.contains(r._1)), dim).iterator)
+            .collect()))
+        Some(new IvfServing(dim,
+          packs.groupBy(_._1).map { case (lid, ps) => lid -> concat(ps.map(_._2).toSeq) }))
       }
-    } finally packs.unpersist(blocking = false)
-    new IvfServing(spark, dim, placement)
+    }
   }
 
   /** Check and pack (list_id, id, embedding) rows into one list each. */
@@ -166,12 +125,6 @@ private[graft] object IvfServing {
           .collectFirst { case iae: IllegalArgumentException => iae }
         throw bad.fold[Throwable](e)(iae => new IllegalArgumentException(iae.getMessage, e))
     }
-
-  /** Partition `i` holds the list whose id is the `i`-th smallest. */
-  private final class ListPartitioner(partitionOf: Map[Int, Int]) extends Partitioner {
-    override def numPartitions: Int = partitionOf.size
-    override def getPartition(key: Any): Int = partitionOf(key.asInstanceOf[Int])
-  }
 
   /** Score one list against `q` and cut it: its bounded `(dist, id)`
     * top-k, or every posting strictly below eps. */

@@ -4,14 +4,15 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, typedlit}
 import org.apache.spark.sql.types._
 import graft.functions.l2sq
-import graft.operators.IvfIndex
+import graft.operators.{IvfIndex, IvfServing}
 
 /** Pins the serving handle behind `IvfIndex.search`,
   * `searchAndReconstruct` and `rangeSearch` bit for bit against the
   * `scanProbed` DataFrame chain (the path the filtered searches still
-  * run), in both placements, on an in-memory, a persisted and a live
-  * (tombstoned) index. The corpus has small integer coordinates, so
-  * distances tie densely and several vectors duplicate the query. */
+  * run, and the one an index without a handle searches by) on an
+  * in-memory, a persisted and a live (tombstoned) index. The corpus has
+  * small integer coordinates, so distances tie densely and several
+  * vectors duplicate the query. */
 class ServingSpec extends SparkSpec {
 
   private val nlist = 4
@@ -53,12 +54,10 @@ class ServingSpec extends SparkSpec {
     "persisted" -> (() => IvfIndex.load(spark, persistedDir)),
     "live" -> (() => IvfIndex.loadLive(spark, liveDir)))
 
-  private val budgets = Seq("driver" -> Long.MaxValue, "rdd" -> 0L)
-
-  /** A fresh `Index` object whose handle is opened in `placement`. */
-  private def opened(make: () => IvfIndex.Index, placement: String): IvfIndex.Index = {
+  /** A fresh `Index` object with its serving handle open. */
+  private def opened(make: () => IvfIndex.Index): IvfIndex.Index = {
     val idx = make()
-    assert(idx.serving(budgets.toMap.apply(placement)).placementName == placement)
+    assert(idx.serving.nonEmpty)
     idx
   }
 
@@ -78,65 +77,85 @@ class ServingSpec extends SparkSpec {
 
   private def dists(df: DataFrame): Seq[Double] = df.collect().toSeq.map(_.getDouble(1))
 
-  indexes.foreach { case (name, make) =>
-    budgets.foreach { case (placement, _) =>
-      test(s"$name, $placement placement: search, searchAndReconstruct and rangeSearch equal the DataFrame chain bit for bit") {
-        val idx = opened(make, placement)
-        val live = idx.postings.count().toInt
-        if (name == "live") assert(live == corpus.size - removed.size)
-        val full = chain(idx, q, IvfIndex.TopK(live), nlist, None)
-        assert(dists(full).take(11).distinct.size < 11, "ties inside the top 11")
-        assert(dists(full).count(_ == 0.0) > 2, "exact duplicates of the query")
-        for (v <- Seq(q, other); nprobe <- Seq(2, nlist); excl <- Seq(None, Some(qid))) {
-          val what = s"q=${v.toSeq} nprobe=$nprobe excludeId=$excl"
-          for (k <- Seq(0, 1, 10, live + 50)) {
-            val cut = IvfIndex.TopK(k)
-            assert(bits(IvfIndex.search(idx, v, k, nprobe, excl)) ==
-              bits(chain(idx, v, cut, nprobe, excl)), s"search $what k=$k")
-          }
-          for (k <- Seq(10, live + 50)) {
-            assert(bits(IvfIndex.searchAndReconstruct(idx, v, k, nprobe, excl)) ==
-              bits(chain(idx, v, IvfIndex.TopK(k), nprobe, excl, keep = Seq("embedding"))),
-              s"searchAndReconstruct $what k=$k")
-          }
-          val eps = 3.0
-          val range = IvfIndex.rangeSearch(idx, v, eps, nprobe, excl)
-          assert(bits(range) == bits(chain(idx, v, IvfIndex.Below(eps), nprobe, excl)),
-            s"rangeSearch $what")
-          if (v eq q)
-            assert(dists(chain(idx, v, IvfIndex.TopK(live), nprobe, excl)).contains(eps),
-              s"a candidate sits exactly on eps, $what")
-        }
+  /** `search`, `searchAndReconstruct` and `rangeSearch` of `idx` against
+    * the chain: dense ties, exact duplicates of the query, a candidate
+    * exactly on eps, with and without `excludeId`, k = 0 and k above the
+    * live count, nprobe 2 and all. */
+  private def assertAsChain(idx: IvfIndex.Index, name: String): Unit = {
+    val live = idx.postings.count().toInt
+    if (name == "live") assert(live == corpus.size - removed.size)
+    val full = chain(idx, q, IvfIndex.TopK(live), nlist, None)
+    assert(dists(full).take(11).distinct.size < 11, "ties inside the top 11")
+    assert(dists(full).count(_ == 0.0) > 2, "exact duplicates of the query")
+    for (v <- Seq(q, other); nprobe <- Seq(2, nlist); excl <- Seq(None, Some(qid))) {
+      val what = s"q=${v.toSeq} nprobe=$nprobe excludeId=$excl"
+      for (k <- Seq(0, 1, 10, live + 50)) {
+        val cut = IvfIndex.TopK(k)
+        assert(bits(IvfIndex.search(idx, v, k, nprobe, excl)) ==
+          bits(chain(idx, v, cut, nprobe, excl)), s"search $what k=$k")
       }
+      for (k <- Seq(10, live + 50)) {
+        assert(bits(IvfIndex.searchAndReconstruct(idx, v, k, nprobe, excl)) ==
+          bits(chain(idx, v, IvfIndex.TopK(k), nprobe, excl, keep = Seq("embedding"))),
+          s"searchAndReconstruct $what k=$k")
+      }
+      val eps = 3.0
+      val range = IvfIndex.rangeSearch(idx, v, eps, nprobe, excl)
+      assert(bits(range) == bits(chain(idx, v, IvfIndex.Below(eps), nprobe, excl)),
+        s"rangeSearch $what")
+      if (v eq q)
+        assert(dists(chain(idx, v, IvfIndex.TopK(live), nprobe, excl)).contains(eps),
+          s"a candidate sits exactly on eps, $what")
     }
   }
 
-  budgets.foreach { case (placement, _) =>
-    test(s"$placement placement: an Index answers as its own snapshot; a new loadLive sees appends and removals") {
-      import spark.implicits._
-      val dir = tmpDir("serving-stale-")
-      IvfIndex.save(built, dir)
-      val old = opened(() => IvfIndex.load(spark, dir), placement)
-      val all = corpus.size + 100
-      def ids(df: DataFrame): Set[Long] = df.collect().map(_.getLong(0)).toSet
-      val before = bits(IvfIndex.search(old, q, all, nlist))
-      assert(before.size == corpus.size)
-
-      val appended = (1000L until 1010L).map(id => id -> q.map(_ + 0.5f))
-      assert(IvfIndex.appendBatch(spark, dir, appended.toDF("id", "embedding"),
-        "id", "embedding", batchId = 0L) == appended.size)
-      val gone = Seq(3L, 240L, 1004L)
-      assert(IvfIndex.removeIds(spark, dir, gone.toDF("id"), "id") == gone.size)
-
-      val fresh = opened(() => IvfIndex.loadLive(spark, dir), placement)
-      val now = IvfIndex.search(fresh, q, all, nlist)
-      assert(bits(now) == bits(chain(fresh, q, IvfIndex.TopK(all), nlist, None)))
-      assert(ids(now) == corpus.map(_._1).toSet ++ appended.map(_._1) -- gone)
-
-      // the old object keeps its snapshot, as its DataFrame does
-      assert(bits(IvfIndex.search(old, q, all, nlist)) == before)
-      assert(before == bits(chain(old, q, IvfIndex.TopK(all), nlist, None)))
+  indexes.foreach { case (name, make) =>
+    test(s"$name: search, searchAndReconstruct and rangeSearch equal the DataFrame chain bit for bit") {
+      assertAsChain(opened(make), name)
     }
+  }
+
+  test("an index whose ids are not longs keeps the pruned scan and its id type") {
+    import spark.implicits._
+    val intIds = IvfIndex.build(corpus.map { case (id, v) => (id.toInt, v) }.toDF("id", "embedding"),
+      "id", "embedding", nlist)
+    assert(intIds.serving.isEmpty)
+    assertAsChain(intIds, "int ids")
+    assert(IvfIndex.search(intIds, q, 10, 2).schema("id").dataType == IntegerType)
+    assert(bits(IvfIndex.searchShards(Seq(intIds), q, 10, 2)) ==
+      bits(IvfIndex.search(intIds, q, 10, 2)))
+    val dir = tmpDir("serving-int-")
+    IvfIndex.save(intIds, dir)
+    val loaded = IvfIndex.load(spark, dir)
+    assert(loaded.serving.isEmpty)
+    val plan = IvfIndex.search(loaded, q, 10, 2).queryExecution.executedPlan.toString
+    assert(plan.contains("PartitionFilters: [list_id"), plan)
+  }
+
+  test("an Index answers as its own snapshot; a new loadLive sees appends and removals") {
+    import spark.implicits._
+    val dir = tmpDir("serving-stale-")
+    IvfIndex.save(built, dir)
+    val old = opened(() => IvfIndex.load(spark, dir))
+    val all = corpus.size + 100
+    def ids(df: DataFrame): Set[Long] = df.collect().map(_.getLong(0)).toSet
+    val before = bits(IvfIndex.search(old, q, all, nlist))
+    assert(before.size == corpus.size)
+
+    val appended = (1000L until 1010L).map(id => id -> q.map(_ + 0.5f))
+    assert(IvfIndex.appendBatch(spark, dir, appended.toDF("id", "embedding"),
+      "id", "embedding", batchId = 0L) == appended.size)
+    val gone = Seq(3L, 240L, 1004L)
+    assert(IvfIndex.removeIds(spark, dir, gone.toDF("id"), "id") == gone.size)
+
+    val fresh = opened(() => IvfIndex.loadLive(spark, dir))
+    val now = IvfIndex.search(fresh, q, all, nlist)
+    assert(bits(now) == bits(chain(fresh, q, IvfIndex.TopK(all), nlist, None)))
+    assert(ids(now) == corpus.map(_._1).toSet ++ appended.map(_._1) -- gone)
+
+    // the old object keeps its snapshot, as its DataFrame does
+    assert(bits(IvfIndex.search(old, q, all, nlist)) == before)
+    assert(before == bits(chain(old, q, IvfIndex.TopK(all), nlist, None)))
   }
 
   /** `built` plus one posting of id 9999 in the list a 1-probe search of
@@ -151,21 +170,17 @@ class ServingSpec extends SparkSpec {
       built.postings.select("list_id", "id", "embedding").unionByName(bad))
   }
 
-  budgets.foreach { case (placement, budget) =>
-    test(s"$placement placement: a null embedding fails at open, naming the id, even in an unprobed list") {
-      val e = intercept[IllegalArgumentException](
-        withBadPosting(null).serving(budget))
-      assert(e.getMessage.contains("9999") && e.getMessage.contains("null"), e.getMessage)
-      val idx = withBadPosting(null)
-      val e2 = intercept[IllegalArgumentException](IvfIndex.search(idx, q, 10, 1))
-      assert(e2.getMessage.contains("9999"), e2.getMessage)
-    }
+  test("a null embedding fails at open, naming the id, even in an unprobed list") {
+    val e = intercept[IllegalArgumentException](withBadPosting(null).serving)
+    assert(e.getMessage.contains("9999") && e.getMessage.contains("null"), e.getMessage)
+    val idx = withBadPosting(null)
+    val e2 = intercept[IllegalArgumentException](IvfIndex.search(idx, q, 10, 1))
+    assert(e2.getMessage.contains("9999"), e2.getMessage)
+  }
 
-    test(s"$placement placement: an embedding of the wrong length fails at open, naming the id") {
-      val e = intercept[IllegalArgumentException](
-        withBadPosting(Array(1f, 2f)).serving(budget))
-      assert(e.getMessage.contains("9999") && e.getMessage.contains("2 dims"), e.getMessage)
-    }
+  test("an embedding of the wrong length fails at open, naming the id") {
+    val e = intercept[IllegalArgumentException](withBadPosting(Array(1f, 2f)).serving)
+    assert(e.getMessage.contains("9999") && e.getMessage.contains("2 dims"), e.getMessage)
   }
 
   test("k < 0 fails with IllegalArgumentException") {
@@ -179,19 +194,34 @@ class ServingSpec extends SparkSpec {
     }
   }
 
-  test("rdd placement: open and search jobs say what they are and restore the caller's description") {
+  test("open jobs say what they are and restore the caller's description; searches then run no job") {
     val probe = new JobProbe(spark, "serving-spec-")
     try {
       val idx = IvfIndex.Index(built.centroids, built.postings)
-      probe.in("open")(idx.serving(0L))
-      val open = probe.jobs("open")
-      assert(open.nonEmpty && open.forall(_.startsWith("IvfIndex serving open")), open)
-      assert(open.exists(_.contains("placement=rdd")), open)
+      probe.in("open") {
+        assert(idx.serving.nonEmpty)
+        assert(spark.sparkContext.getLocalProperty("spark.job.description") == "serving-spec-open")
+      }
+      // the centroid collect of an in-memory index may run no job
+      assert(probe.jobs("open").distinct.filterNot(_ == "IvfIndex serving open: centroids") ==
+        Seq("IvfIndex serving open: count postings", s"IvfIndex serving open: pack ${corpus.size} postings"))
       probe.in("search") {
         IvfIndex.search(idx, q, 10, 2).collect()
-        assert(spark.sparkContext.getLocalProperty("spark.job.description") == "serving-spec-search")
+        IvfIndex.rangeSearch(idx, q, 3.0, 2).collect()
+        IvfIndex.searchShards(Seq(idx, idx), q, 10, 2).collect()
       }
-      assert(probe.jobs("search") == Seq("IvfIndex.search nprobe=2 placement=rdd"))
+      assert(probe.jobs("search").isEmpty)
+    } finally probe.close()
+  }
+
+  test("above the byte bound open keeps no handle and reads only the posting count") {
+    val probe = new JobProbe(spark, "serving-spec-")
+    try {
+      val idx = IvfIndex.Index(built.centroids, built.postings)
+      val bytes = corpus.size * (8L + 4L * q.length)
+      assert(probe.in("fits")(IvfServing.open(idx, bytes)).nonEmpty)
+      assert(probe.in("over")(IvfServing.open(idx, bytes - 1)).isEmpty)
+      assert(probe.jobs("over").distinct == Seq("IvfIndex serving open: count postings"))
     } finally probe.close()
   }
 }
