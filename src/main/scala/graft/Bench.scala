@@ -145,7 +145,8 @@ object Bench {
     // r14: graph-ANN (NN-descent build is its own warm entry — six
     // checkpointed join rounds at kb=20 over 2000 nodes; the audits
     // then ride the cached graph + the guarded exact twin), and the
-    // 128-query amortized batch (one searchAll pass, window-bounded).
+    // 128-query amortized batch (one searchAll pass, served from the
+    // index's handle).
     // r14 archive medians: build 23.2 at buildFactor=2 — the sf0.5-driven
     // default of 3 squares the per-round fan-out, bound 60 — stats 6.1-6.6 (the per-rep
     // 2000-node exact-graph window), search 1.9-2.6, batch128 0.68

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 /** Nearest-centroid assignment as a codegen'd scalar: the position of
   * the closest row of `cents` (squared-L2, strict-less so the first
   * minimum wins — the same tie-break as MLlib's `findClosest` and the
-  * (cdist, list_id) window in IvfIndex.searchAll) for a float-array
+  * (cdist, list_id) window in IvfIndex.searchAllScan) for a float-array
   * embedding.
   *
   * This is FAISS `index.add`'s coarse-quantizer step

@@ -297,8 +297,10 @@ object Clustering {
   /** Reference-parity clustering: the graph is approximate — limited
     * to each vector's k nearest neighbors within nprobe probed lists
     * (app.py:77,84-85 defaults k=10, nprobe=2), edge iff dist < ε
-    * strictly with self-pairs excluded (app.py:91-93). The candidate
-    * join is an equi-join on list_id (bucketed — no cartesian). */
+    * strictly with self-pairs excluded (app.py:91-93). The candidates
+    * come from [[IvfIndex.searchAll]]: one narrow map against the
+    * index's serving handle, or the equi-join on list_id (bucketed — no
+    * cartesian) above the serving bound. */
   def clusterIvf(spark: SparkSession, sfDir: String, eps: Double = 0.75,
                  k: Int = 10, nlist: Int = 4, nprobe: Int = 2): DataFrame = {
     // Memoized like clusterExact: Verify and Bench both invoke the

@@ -481,7 +481,8 @@ object Dedup {
   }
 
   /** North-star document dedup: embed the corpus, IVF-bucketed
-    * candidate generation (searchAll — equi-join on list_id, no cross
+    * candidate generation (searchAll — a narrow map against the serving
+    * handle, or the equi-join on list_id above its bound; never a cross
     * product), ε-edges, connected components. Returns
     * (doc_id, canonical_id, kept).
     *

@@ -97,7 +97,7 @@ object IpSearch {
     * ≤nlist centroid matrix, the same bounded-collect class). */
   def probeListsIp(index: IvfIndex.Index, q: Array[Float],
                    nprobe: Int): Seq[Int] =
-    IvfIndex.rankLists(index, q, nprobe, descending = true) { c =>
+    IvfIndex.rankLists(index.centroidArrays, q, nprobe, descending = true) { c =>
       var acc = 0.0; var i = 0
       while (i < c.length) { acc += q(i).toDouble * c(i); i += 1 }
       acc

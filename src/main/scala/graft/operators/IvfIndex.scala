@@ -6,6 +6,7 @@ import org.apache.spark.ml.linalg.{Vector => MlVector}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.functions.l2sq
 
 /** IVF (inverted-file) ANN index — the reference's core data structure
@@ -22,15 +23,17 @@ import graft.functions.l2sq
   *
   * Scale posture: train samples/aggregates via MLlib (distributed
   * Lloyd's); assignment is a broadcast nested-loop against ≤`nlist`
-  * centroids (tiny). Batch search ([[searchAll]]) and the filtered
-  * searches scan only the probed partitions — at 100 TB a query touches
-  * `nprobe/nlist` of the data instead of all of it, exactly the
-  * reference's pruning ratio. Single-query search ([[search]],
-  * [[searchAndReconstruct]], [[rangeSearch]]) answers from the index's
-  * serving handle ([[IvfServing]]) when its postings fit
+  * centroids (tiny). The filtered searches scan only the probed
+  * partitions — at 100 TB a query touches `nprobe/nlist` of the data
+  * instead of all of it, exactly the reference's pruning ratio.
+  * Single-query search ([[search]], [[searchAndReconstruct]],
+  * [[rangeSearch]]) and batch search ([[searchAll]]) answer from the
+  * index's serving handle ([[IvfServing]]) when its postings fit
   * [[MaxDriverServingBytes]]: the postings packed per list in the
-  * driver heap, read once per `Index`, so a query runs no Spark job.
-  * Above that bound it keeps the pruned scan.
+  * driver heap, read once per `Index`, so a single query runs no Spark
+  * job and a batch is one narrow map over the queries against a
+  * broadcast of the packed lists. Above that bound both keep the pruned
+  * scan (for a batch, the equi-join on probed list ids).
   */
 object IvfIndex {
 
@@ -51,13 +54,13 @@ object IvfIndex {
         .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
 
     /** The serving handle ([[IvfServing.open]] under
-      * [[MaxDriverServingBytes]]), opened by the first single-query
-      * search on this object and kept for its lifetime; None when the
-      * index searches by the pruned scan. It reads `postings` as this
+      * [[MaxDriverServingBytes]]), opened by the first single-query or
+      * batch search on this object and kept for its lifetime; None when
+      * the index searches by the pruned scan. It reads `postings` as this
       * object sees it, so it shares the file listing a loaded index
       * fixed when it was created and never outlives that generation. Its
-      * packed lists stay in the driver heap as long as this object is
-      * reachable. */
+      * packed lists, and their broadcast once a [[searchAll]] has made
+      * it, stay in memory as long as this object is reachable. */
     @transient private[graft] lazy val serving: Option[IvfServing] =
       IvfServing.open(this, MaxDriverServingBytes)
   }
@@ -148,24 +151,26 @@ object IvfIndex {
     * driver/library split and lets the postings scan prune partitions
     * statically. Ties keep the smaller list id (first-min). */
   def probeLists(index: Index, q: Array[Float], nprobe: Int): Seq[Int] =
-    rankLists(index, q, nprobe, descending = false) { c =>
-      var acc = 0.0; var i = 0
-      while (i < c.length) { val d = c(i) - q(i); acc += d * d; i += 1 }
-      acc
-    }
+    probeCentroids(index.centroidArrays, q, nprobe)
 
-  /** The one driver-side probe loop behind [[probeLists]] and
+  /** [[probeLists]] over a centroid matrix: squared L2 by the `l2sq`
+    * loop ([[IvfServing.l2]]), so a single search and every row of a
+    * served [[searchAll]] probe the same lists. */
+  private[graft] def probeCentroids(cents: Array[(Int, Array[Float])], q: Array[Float],
+                                    nprobe: Int): Seq[Int] =
+    rankLists(cents, q, nprobe, descending = false)(IvfServing.l2(_, 0, q))
+
+  /** The one probe loop behind [[probeLists]] and
     * [[IpSearch.probeListsIp]]: score every centroid, rank by
     * `(score, list_id)` — score ascending, or descending when
     * `descending` — and keep the first `nprobe` list ids. Rejects
     * `nprobe < 1` (it would probe nothing and silently return no rows)
     * and a query whose length is not the centroid dimension (the
     * scoring loop would otherwise truncate or overrun it). */
-  private[graft] def rankLists(index: Index, q: Array[Float], nprobe: Int,
+  private[graft] def rankLists(cents: Array[(Int, Array[Float])], q: Array[Float], nprobe: Int,
                                descending: Boolean)
                               (score: Array[Float] => Double): Seq[Int] = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val cents = index.centroidArrays
     cents.headOption.foreach { case (_, c) =>
       require(q.length == c.length,
         s"query has ${q.length} dims but the centroids have ${c.length}")
@@ -268,7 +273,7 @@ object IvfIndex {
     val probed = probeLists(index, q, nprobe)
     index.serving match {
       case Some(h) => IvfServing.frame(index.postings.sparkSession,
-        h.hits(q, probed, cut, excludeId, withVecs), withVecs)
+        h.lists.hits(q, probed, cut, excludeId, withVecs), withVecs)
       case None => scanProbed(index.postings, probed, l2sq(col("embedding"), typedlit(q)),
         "dist", cut, excludeId = excludeId, keep = if (withVecs) Seq("embedding") else Nil)
     }
@@ -324,12 +329,52 @@ object IvfIndex {
       .select(col("id"), col("list_id"), col("embedding"))
 
   /** Per-query kNN against the index for EVERY vector in `queries`
-    * (the reference's batch self-search, app.py:84-85): equi-join on
-    * probed list ids — the scale-safe bucketed similarity-join shape
-    * (no cartesian product). Returns (src_id, dst_id, dist) with
-    * dst ranked per src. */
+    * (the reference's batch self-search, app.py:84-85). Returns the lazy
+    * frame (src_id, dst_id, dist, rank): `src_id` of the `idCol` type,
+    * `dst_id` a long, and each query's nearest `k` postings within its
+    * `nprobe` probed lists, itself excluded, ranked `1..k` by
+    * `(dist, dst_id)`. Query ids are expected unique.
+    *
+    * When the index has a serving handle ([[Index.serving]]), the query
+    * id is an int or a long and the embedding an array of floats, the
+    * postings are not shuffled: one narrow map over the queries answers
+    * each row against the handle's broadcast lists, exactly as
+    * `search(index, emb, k, nprobe, Some(id))` would. A row whose
+    * embedding is null or not of the centroid dimension fails the
+    * action with `IllegalArgumentException` naming its `src_id`; each
+    * row is answered on its own, so a repeated id gets one ranking per
+    * row. Otherwise it is [[searchAllScan]]. `k < 0` and `nprobe < 1`
+    * fail with `IllegalArgumentException`. */
   def searchAll(index: Index, queries: DataFrame, idCol: String,
                 embCol: String, k: Int, nprobe: Int): DataFrame = {
+    require(k >= 0, s"k must be >= 0, got $k")
+    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
+    val q = queries.select(col(idCol).as("src_id"), col(embCol).as("src_emb"))
+    val (id, emb) = (q.schema("src_id"), q.schema("src_emb"))
+    val servable = (id.dataType, emb.dataType) match {
+      case (IntegerType | LongType, ArrayType(FloatType, _)) => true
+      case _ => false
+    }
+    (if (servable) index.serving else None) match {
+      case Some(h) =>
+        val posting = index.postings.schema
+        h.searchAll(q, k, nprobe, StructType(Seq(
+          id,
+          StructField("dst_id", LongType, posting("id").nullable),
+          StructField("dist", DoubleType, emb.nullable || posting("embedding").nullable),
+          StructField("rank", IntegerType, nullable = false))))
+      case None => searchAllScan(index, queries, idCol, embCol, k, nprobe)
+    }
+  }
+
+  /** [[searchAll]] as a DataFrame plan, for an index without a serving
+    * handle: the queries rank the broadcast centroids in a `(cdist,
+    * list_id)` window, then equi-join the postings on the probed list
+    * ids — the scale-safe bucketed similarity-join shape (no cartesian
+    * product) — and rank the candidates per `src_id` in a second
+    * window. Repeated query ids share one ranking. */
+  private[graft] def searchAllScan(index: Index, queries: DataFrame, idCol: String,
+                                   embCol: String, k: Int, nprobe: Int): DataFrame = {
     val cents = index.centroids
     val q = queries.select(col(idCol).as("src_id"), col(embCol).as("src_emb"))
     // rank centroids per query, keep nprobe nearest lists
@@ -410,7 +455,7 @@ object IvfIndex {
       col(embCol).as("embedding"))
   }
 
-  /** The distributed coarse quantizer (the J2 shape `searchAll`
+  /** The distributed coarse quantizer (the J2 shape `searchAllScan`
     * already uses for query×centroid probing): rows × broadcast
     * centroids, squared-L2, per-row argmin — NOT a rank window, so the
     * reduction is partial (map-side combine) and no per-row candidate
@@ -849,7 +894,7 @@ object IvfIndex {
     val handles = indexes.flatMap(_.serving)
     if (handles.size == indexes.size) {
       val hits = indexes.zip(handles).flatMap { case (ix, h) =>
-        h.hits(q, probeLists(ix, q, nprobe), cut, excludeId, withVecs = false) }
+        h.lists.hits(q, probeLists(ix, q, nprobe), cut, excludeId, withVecs = false) }
       IvfServing.frame(indexes.head.postings.sparkSession,
         IvfServing.merge(hits, cut), withVecs = false)
     } else

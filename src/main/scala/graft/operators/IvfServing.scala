@@ -2,8 +2,9 @@ package graft.operators
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
-import org.apache.spark.{SparkContext, SparkException}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.{SparkContext, SparkThrowable}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import IvfIndex.{Below, Cut, TopK}
@@ -17,24 +18,44 @@ private[graft] final class PackedList(val ids: Array[Long], val vecs: Array[Floa
   * for it (`searchAndReconstruct`), else null. */
 private[graft] final case class Hit(id: Long, dist: Double, vec: Array[Float])
 
-/** The serving handle of one [[IvfIndex.Index]]: its postings packed per
-  * list in the driver heap, read once from the index's own `postings`
-  * frame, so the handle answers exactly as that frame would (the same
-  * file listing for a loaded index, the tombstone anti-join of
-  * [[IvfIndex.loadLive]] already applied). A single-query search scores
-  * the probed lists against it and runs no Spark job.
-  *
-  * Distances are accumulated in double over `(double)v_i − (double)q_i`,
-  * the loop of [[graft.functions.L2Sq]], so every distance and every
-  * `(dist, id)` rank is bit-identical to the `l2sq` DataFrame scan. */
-private[graft] final class IvfServing private (dim: Int, lists: Map[Int, PackedList]) {
-  import IvfServing._
+/** What a served search reads: the centroid matrix (as
+  * [[IvfIndex.Index.centroidArrays]]) and the postings packed per list.
+  * The driver scores it directly; a served [[IvfIndex.searchAll]] task
+  * reads it from the handle's broadcast. */
+private[graft] final class ServedLists(val dim: Int, val centroids: Array[(Int, Array[Float])],
+                                       lists: Map[Int, PackedList]) extends Serializable {
 
   /** The ranked hits of `q` over the `probed` lists, cut by `cut`,
     * leaving out `excludeId`. */
   def hits(q: Array[Float], probed: Seq[Int], cut: Cut, excludeId: Option[Long],
            withVecs: Boolean): Seq[Hit] =
-    merge(probed.flatMap(lists.get).flatMap(scan(_, dim, q, cut, excludeId, withVecs)), cut)
+    IvfServing.merge(probed.flatMap(lists.get)
+      .flatMap(IvfServing.scan(_, dim, q, cut, excludeId, withVecs)), cut)
+}
+
+/** The serving handle of one [[IvfIndex.Index]]: its postings packed per
+  * list in the driver heap, read once from the index's own `postings`
+  * frame, so the handle answers exactly as that frame would (the same
+  * file listing for a loaded index, the tombstone anti-join of
+  * [[IvfIndex.loadLive]] already applied). A single-query search scores
+  * the probed lists against it and runs no Spark job; a batch
+  * [[IvfIndex.searchAll]] scores each query row in a narrow map against
+  * a broadcast of the same lists, made once per handle and freed with
+  * it by Spark's context cleaner.
+  *
+  * Distances are accumulated in double over `(double)v_i − (double)q_i`,
+  * the loop of [[graft.functions.L2Sq]], so every distance and every
+  * `(dist, id)` rank is bit-identical to the `l2sq` DataFrame scan. */
+private[graft] final class IvfServing private (sc: SparkContext, val lists: ServedLists) {
+
+  private lazy val shipped: Broadcast[ServedLists] = sc.broadcast(lists)
+
+  /** [[IvfIndex.searchAll]] over `queries` (`src_id` an int or a long,
+    * `src_emb` an array of floats): each row is answered as
+    * `search(index, src_emb, k, nprobe, Some(src_id))` and its hits come
+    * out ranked `1..k` in `schema` (src_id, dst_id, dist, rank). */
+  def searchAll(queries: DataFrame, k: Int, nprobe: Int, schema: StructType): DataFrame =
+    IvfServing.answerAll(queries, shipped, TopK(k), nprobe, schema)
 }
 
 private[graft] object IvfServing {
@@ -56,9 +77,9 @@ private[graft] object IvfServing {
     *    postings per query.
     * Otherwise every posting is read once, checked and packed per list:
     * a posting whose embedding is null or not of the centroid dimension
-    * fails here with `IllegalArgumentException` naming its id, whichever
-    * list it is in. Postings of a list with no centroid are never
-    * probed, so they are dropped. */
+    * fails here with [[BadInput]] naming its id, whichever list it is
+    * in. Postings of a list with no centroid are never probed, so they
+    * are dropped. */
   def open(index: IvfIndex.Index, maxDriverBytes: Long): Option[IvfServing] = {
     val postings = index.postings
     val types = postings.schema.fields.map(f => f.name -> f.dataType).toMap
@@ -77,13 +98,13 @@ private[graft] object IvfServing {
       val n = describing(sc, "IvfIndex serving open: count postings")(postings.count())
       if (n * (8L + 4L * dim) > maxDriverBytes) None
       else {
-        val packs = describing(sc, s"IvfIndex serving open: pack $n postings")(rethrowBadInput(
+        val packs = describing(sc, s"IvfIndex serving open: pack $n postings")(
           postings.select(col("list_id"), col("id"), col("embedding"))
             .as[(Int, Long, Array[Float])].rdd
             .mapPartitions(it => pack(it.filter(r => lids.contains(r._1)), dim).iterator)
-            .collect()))
-        Some(new IvfServing(dim,
-          packs.groupBy(_._1).map { case (lid, ps) => lid -> concat(ps.map(_._2).toSeq) }))
+            .collect())
+        Some(new IvfServing(sc, new ServedLists(dim, cents,
+          packs.groupBy(_._1).map { case (lid, ps) => lid -> concat(ps.map(_._2).toSeq) })))
       }
     }
   }
@@ -94,9 +115,9 @@ private[graft] object IvfServing {
     val builders = mutable.LinkedHashMap.empty[Int,
       (mutable.ArrayBuilder.ofLong, mutable.ArrayBuilder.ofFloat)]
     rows.foreach { case (lid, id, v) =>
-      require(v != null, s"posting id $id has a null embedding")
-      require(v.length == dim,
-        s"posting id $id has ${v.length} dims but the centroids have $dim")
+      if (v == null) throw new BadInput(s"posting id $id has a null embedding")
+      if (v.length != dim)
+        throw new BadInput(s"posting id $id has ${v.length} dims but the centroids have $dim")
       val (ids, vecs) = builders.getOrElseUpdate(lid,
         (new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofFloat))
       ids += id; vecs ++= v
@@ -115,27 +136,34 @@ private[graft] object IvfServing {
       new PackedList(ids.result(), vecs.result())
     }
 
-  /** Spark's task failure carries the executor's exception as its cause;
-    * a bad posting found while packing surfaces as the
-    * `IllegalArgumentException` it is. */
-  private def rethrowBadInput[T](body: => T): T =
-    try body catch {
-      case e: SparkException =>
-        val bad = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-          .collectFirst { case iae: IllegalArgumentException => iae }
-        throw bad.fold[Throwable](e)(iae => new IllegalArgumentException(iae.getMessage, e))
-    }
+  /** The rows of one partition of [[IvfServing.searchAll]]'s queries,
+    * answered against the broadcast lists. A row with a null id has no
+    * neighbours (the scan's `src_id <> dst_id` is never true for it); a
+    * null embedding, or one not of the centroid dimension, fails with
+    * [[BadInput]] naming the row's `src_id`. */
+  private def answerAll(queries: DataFrame, shipped: Broadcast[ServedLists], cut: TopK,
+                        nprobe: Int, schema: StructType): DataFrame =
+    queries.mapPartitions { rows =>
+      val lists = shipped.value
+      rows.filterNot(_.isNullAt(0)).flatMap { r =>
+        val srcId = r.get(0)
+        val id = r.getAs[Number](0).longValue
+        if (r.isNullAt(1)) throw new BadInput(s"query src_id $id has a null embedding")
+        val q = r.getSeq[Float](1).toArray
+        if (lists.centroids.nonEmpty && q.length != lists.dim)
+          throw new BadInput(
+            s"query src_id $id has ${q.length} dims but the centroids have ${lists.dim}")
+        val probed = IvfIndex.probeCentroids(lists.centroids, q, nprobe)
+        lists.hits(q, probed, cut, Some(id), withVecs = false).iterator.zipWithIndex
+          .map { case (h, i) => Row(srcId, h.id, h.dist, i + 1) }
+      }
+    }(Encoders.row(schema))
 
   /** Score one list against `q` and cut it: its bounded `(dist, id)`
     * top-k, or every posting strictly below eps. */
-  private def scan(p: PackedList, dim: Int, q: Array[Float], cut: Cut,
-                   excludeId: Option[Long], withVecs: Boolean): Seq[Hit] = {
-    def distAt(i: Int): Double = {
-      var acc = 0.0; var j = 0; val off = i * dim
-      while (j < dim) { val d = p.vecs(off + j).toDouble - q(j).toDouble; acc += d * d; j += 1 }
-      acc
-    }
-    def hitAt(i: Int): Hit = Hit(p.ids(i), distAt(i),
+  private[operators] def scan(p: PackedList, dim: Int, q: Array[Float], cut: Cut,
+                              excludeId: Option[Long], withVecs: Boolean): Seq[Hit] = {
+    def hitAt(i: Int): Hit = Hit(p.ids(i), l2(p.vecs, i * dim, q),
       if (withVecs) java.util.Arrays.copyOfRange(p.vecs, i * dim, (i + 1) * dim) else null)
     val hits = p.ids.indices.iterator.filter(i => !excludeId.contains(p.ids(i))).map(hitAt)
     cut match {
@@ -149,6 +177,16 @@ private[graft] object IvfServing {
         heap.toSeq
       case Below(eps) => hits.filter(_.dist < eps).toSeq
     }
+  }
+
+  /** Squared L2 of `q` and the `q.length` floats of `v` from `off`: the
+    * loop of [[graft.functions.L2Sq]], `(double)v_i − (double)q_i`
+    * squared and summed in double. The one kernel of the serving scan
+    * and of the IVF probe ([[IvfIndex.probeLists]]). */
+  private[operators] def l2(v: Array[Float], off: Int, q: Array[Float]): Double = {
+    var acc = 0.0; var j = 0
+    while (j < q.length) { val d = v(off + j).toDouble - q(j).toDouble; acc += d * d; j += 1 }
+    acc
   }
 
   /** Merge per-list hits into the global rank and apply the cut again. */
@@ -172,6 +210,16 @@ private[graft] object IvfServing {
   def frame(spark: SparkSession, hits: Seq[Hit], withVecs: Boolean): DataFrame = {
     val rows = hits.map(h => if (withVecs) Row(h.id, h.dist, h.vec) else Row(h.id, h.dist))
     spark.createDataFrame(rows.asJava, if (withVecs) HitVecSchema else HitSchema)
+  }
+
+  /** Bad input found where it is read, possibly inside a Spark task.
+    * Spark hands the caller a task failure that is a `SparkThrowable`
+    * with a condition as it is, not wrapped in a `SparkException`, so
+    * the action that read the bad row fails with this
+    * `IllegalArgumentException` and its message. */
+  private[graft] final class BadInput(message: String)
+    extends IllegalArgumentException(message) with SparkThrowable {
+    override def getCondition: String = "GRAFT_BAD_INPUT"
   }
 
   private val JobDescription = "spark.job.description"

@@ -221,7 +221,7 @@ object VectorSearchOps {
 
   /** Batch exact kNN via the per-query rank window (W1): each of the
     * first `nQueries` vectors gets its k nearest neighbors. The
-    * oracle-able twin of IvfIndex.searchAll (same window shape, no
+    * oracle-able twin of IvfIndex.searchAllScan (same window shape, no
     * candidate pruning). */
   def knnBatchExact(spark: SparkSession, sfDir: String,
                     nQueries: Int = 20, k: Int = 5): DataFrame = {

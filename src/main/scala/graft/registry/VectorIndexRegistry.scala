@@ -199,9 +199,11 @@ private[graft] object VectorIndexRegistry {
     "knn_graph_batch" -> ((s, d) => GraphAnn.graphBatchAudit(s, d)),
     "knn_graph_append" -> ((s, d) => GraphAnn.graphAppendAudit(s, d)),
     // --- 128-query batch service (the qps/amortization bench entry,
-    // r14): ONE searchAll pass serves all 128 probes — one broadcast
-    // centroid rank, one candidate equi-join, one per-query window —
-    // vs 128 sequential scans. At nprobe = nlist the batch result ≡
+    // r14): ONE searchAll pass serves all 128 probes — one narrow map
+    // over the queries against the serving handle's broadcast lists
+    // (the 500k twin above the serving bound keeps the centroid rank,
+    // candidate equi-join and per-query window) — vs 128 sequential
+    // searches. At nprobe = nlist the batch result ≡
     // the exact per-query window, so the entry is hash-exact while
     // Bench times the amortized plan; the 500k-fixture twin measures
     // the amortization factor directly (VECTOR_DECADE artifact). ---

@@ -6,9 +6,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
 
-/** Counts the Spark jobs and tasks a spec's calls run, by job groups the
-  * spec sets (`in`). The listener bus is asynchronous, so `jobs` and
-  * `tasks` first run a marker job in a group of its own and wait until
+/** Counts the Spark jobs, stages, tasks and shuffle bytes a spec's calls
+  * run, by job groups the spec sets (`in`). The listener bus is
+  * asynchronous, so every count first runs a marker job in a group of its own and wait until
   * the listener has seen it: the bus delivers events in order, so by
   * then every earlier job of the spec's groups has been seen too. */
 final class JobProbe(spark: SparkSession, prefix: String) {
@@ -16,6 +16,7 @@ final class JobProbe(spark: SparkSession, prefix: String) {
   private val started = mutable.ArrayBuffer.empty[(String, String)] // (group, description)
   private val stageGroup = mutable.HashMap.empty[Int, String]
   private val taskCount = mutable.HashMap.empty[String, Int]
+  private val shuffleWritten = mutable.HashMap.empty[String, Long]
   private var markers = 0
 
   private val listener = new SparkListener {
@@ -29,7 +30,11 @@ final class JobProbe(spark: SparkSession, prefix: String) {
         }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
       JobProbe.this.synchronized {
-        stageGroup.get(e.stageId).foreach(g => taskCount(g) = taskCount.getOrElse(g, 0) + 1)
+        stageGroup.get(e.stageId).foreach { g =>
+          taskCount(g) = taskCount.getOrElse(g, 0) + 1
+          val written = Option(e.taskMetrics).fold(0L)(_.shuffleWriteMetrics.bytesWritten)
+          shuffleWritten(g) = shuffleWritten.getOrElse(g, 0L) + written
+        }
       }
   }
   sc.addSparkListener(listener)
@@ -60,6 +65,18 @@ final class JobProbe(spark: SparkSession, prefix: String) {
   def tasks(group: String): Int = {
     settle()
     synchronized(taskCount.getOrElse(prefix + group, 0))
+  }
+
+  /** Stages of the jobs run under `group`. */
+  def stages(group: String): Int = {
+    settle()
+    synchronized(stageGroup.count(_._2 == prefix + group))
+  }
+
+  /** Shuffle bytes written by the tasks run under `group`. */
+  def shuffleBytes(group: String): Long = {
+    settle()
+    synchronized(shuffleWritten.getOrElse(prefix + group, 0L))
   }
 
   def close(): Unit = sc.removeSparkListener(listener)

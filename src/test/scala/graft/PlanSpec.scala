@@ -36,8 +36,13 @@ class PlanSpec extends SparkSpec {
   }
 
   test("IVF batch searchAll is an equi-join on list_id — no cartesian/BNLJ on the big side") {
-    val index = IvfIndex.forEmbeddings(spark, sfSmall, nlist = 4)
-    val p = plan(IvfIndex.searchAll(index, Tables.embeddings(spark, sfSmall),
+    // an index with Int ids has no serving handle: searchAll is the scan
+    // plan every index above the serving bound runs
+    val emb = Tables.embeddings(spark, sfSmall)
+    val index = IvfIndex.build(emb.withColumn("vec_id", col("vec_id").cast("int")),
+      "vec_id", "embedding", 4)
+    assert(index.serving.isEmpty)
+    val p = plan(IvfIndex.searchAll(index, emb,
       "vec_id", "embedding", k = 5, nprobe = 2))
     // the only nested-loop join allowed is the tiny query×centroid one
     // (broadcast, <= nlist rows); the postings join must be hash-based
@@ -45,6 +50,15 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin [list_id") || p.contains("SortMergeJoin [list_id") ||
       postingsJoin.contains("HashJoin"),
       s"postings join must be an equi-join on list_id:\n$p")
+    index.postings.unpersist()
+  }
+
+  test("served IVF batch searchAll is one narrow map: no exchange, no join on the postings") {
+    val index = IvfIndex.forEmbeddings(spark, sfSmall, nlist = 4)
+    assert(index.serving.nonEmpty)
+    val p = plan(IvfIndex.searchAll(index, Tables.embeddings(spark, sfSmall),
+      "vec_id", "embedding", k = 5, nprobe = 2))
+    assert(!p.contains("Exchange") && !p.contains("Join"), p)
   }
 
   test("LSH dedup family plans contain no cartesian product or BNLJ anywhere") {

@@ -35,10 +35,10 @@ class ProbedScanSpec extends SparkSpec {
 
   private val q: Array[Float] = corpus.find(_._1 == qid).get._2
 
-  /** The probe's centroid distance: float differences, squared in
-    * float, summed in double. */
+  /** The probe's centroid distance: the `l2sq` loop, double
+    * differences squared and summed in double. */
   private def centroidL2(c: Array[Float], q: Array[Float]): Double =
-    c.indices.foldLeft(0.0) { (s, i) => val d = c(i) - q(i); s + d * d }
+    c.indices.foldLeft(0.0) { (s, i) => val d = c(i).toDouble - q(i).toDouble; s + d * d }
 
   private def l2(a: Array[Float], b: Array[Float]): Double =
     a.indices.map(i => a(i).toDouble - b(i).toDouble).foldLeft(0.0)((s, d) => s + d * d)
@@ -143,6 +143,27 @@ class ProbedScanSpec extends SparkSpec {
       for (k <- Seq(10, cos.size + 50)) {
         assert(hits(CosineIvf.search(idx, q, k, nprobe, Some(qid))) == top(cos, k), s"k=$k")
       }
+    }
+  }
+
+  test("probeLists, search and searchAll probe by double distances where float ones tie") {
+    import spark.implicits._
+    // at 2^24 the float grid step is 2: both float differences round to
+    // -2^24 and tie, so a float loop probes list 0 (the smaller id);
+    // the double differences are -2^24 ± 0.4 and list 1 is nearer
+    val q = Array(16777216f)
+    val (c0, c1) = (Array(-0.4f), Array(0.4f))
+    assert(q(0) - c0(0) == q(0) - c1(0), "the float differences tie")
+    assert(centroidL2(c1, q) < centroidL2(c0, q), "the double distances do not")
+    val idx = IvfIndex.Index(Seq(0 -> c0, 1 -> c1).toDF("list_id", "centroid"),
+      Seq((0, 10L, c0), (1, 11L, c1)).toDF("list_id", "id", "embedding"))
+    assert(idx.serving.nonEmpty)
+    assert(IvfIndex.probeLists(idx, q, 1) == Seq(1))
+    assert(hits(IvfIndex.search(idx, q, 1, 1)).map(_._1) == Seq(11L))
+    val queries = Seq(99L -> q).toDF("id", "embedding")
+    Seq(IvfIndex.searchAll(idx, queries, "id", "embedding", 1, 1),
+        IvfIndex.searchAllScan(idx, queries, "id", "embedding", 1, 1)).foreach { all =>
+      assert(all.select("dst_id").as[Long].collect().toSeq == Seq(11L))
     }
   }
 

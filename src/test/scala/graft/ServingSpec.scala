@@ -9,10 +9,11 @@ import graft.operators.{IvfIndex, IvfServing}
 /** Pins the serving handle behind `IvfIndex.search`,
   * `searchAndReconstruct` and `rangeSearch` bit for bit against the
   * `scanProbed` DataFrame chain (the path the filtered searches still
-  * run, and the one an index without a handle searches by) on an
-  * in-memory, a persisted and a live (tombstoned) index. The corpus has
-  * small integer coordinates, so distances tie densely and several
-  * vectors duplicate the query. */
+  * run, and the one an index without a handle searches by), and the
+  * served `searchAll` against `searchAllScan`, on an in-memory, a
+  * persisted and a live (tombstoned) index. The corpus has small
+  * integer coordinates, so distances tie densely and several vectors
+  * duplicate the query. */
 class ServingSpec extends SparkSpec {
 
   private val nlist = 4
@@ -75,6 +76,41 @@ class ServingSpec extends SparkSpec {
     case x => x
   })
 
+  /** A batch of queries in 3 partitions: every third corpus vector
+    * (with the query and its exact duplicates) under its own id, and
+    * vectors outside the corpus under ids it does not hold. */
+  private lazy val batch: DataFrame = {
+    import spark.implicits._
+    val inside = corpus.filter { case (id, _) => id % 3 == 0 || id >= 240L }
+    val outside = Seq(other, Array(0.5f, 1.5f, 2f, 0f), Array(3f, 3f, 3f, 3f))
+      .zipWithIndex.map { case (v, i) => (5000L + i, v) }
+    (inside ++ outside).toDF("id", "embedding").repartition(3)
+  }
+
+  /** searchAll rows sorted by (src_id, rank), as (src_id, rank, dst_id,
+    * dist bits). */
+  private def ranked(df: DataFrame): Seq[Seq[Any]] =
+    df.select("src_id", "rank", "dst_id", "dist").collect().toSeq
+      .map(r => Seq(r.get(0), r.get(1), r.get(2),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(3))))
+      .sortBy(r => (r(0).asInstanceOf[Number].longValue, r(1).asInstanceOf[Int]))
+
+  /** The served searchAll of `idx` equals `searchAllScan` bit for bit,
+    * with the same schema, and each row equals the single search. */
+  private def assertServedAll(idx: IvfIndex.Index, queries: DataFrame, k: Int,
+                              nprobe: Int, what: String): Unit = {
+    val served = IvfIndex.searchAll(idx, queries, "id", "embedding", k, nprobe)
+    val scan = IvfIndex.searchAllScan(idx, queries, "id", "embedding", k, nprobe)
+    val plan = served.queryExecution.executedPlan.toString
+    assert(!plan.contains("Join") && !plan.contains("Window"), s"$what:\n$plan")
+    assert(served.schema == scan.schema, s"$what: ${served.schema} vs ${scan.schema}")
+    val rows = ranked(served)
+    assert(rows == ranked(scan), what)
+    val qRow = rows.filter(_.head.asInstanceOf[Number].longValue == qid)
+      .map(r => Seq(r(2), r(3)))
+    assert(qRow == bits(IvfIndex.search(idx, q, k, nprobe, Some(qid))), s"$what: row of $qid")
+  }
+
   private def dists(df: DataFrame): Seq[Double] = df.collect().toSeq.map(_.getDouble(1))
 
   /** `search`, `searchAndReconstruct` and `rangeSearch` of `idx` against
@@ -112,6 +148,76 @@ class ServingSpec extends SparkSpec {
   indexes.foreach { case (name, make) =>
     test(s"$name: search, searchAndReconstruct and rangeSearch equal the DataFrame chain bit for bit") {
       assertAsChain(opened(make), name)
+    }
+  }
+
+  indexes.foreach { case (name, make) =>
+    test(s"$name: served searchAll equals searchAllScan bit for bit") {
+      val idx = opened(make)
+      val live = idx.postings.count().toInt
+      val self = ranked(IvfIndex.searchAllScan(idx, batch, "id", "embedding", live, nlist))
+        .filter(_.head == qid)
+      assert(self.count(_(3) == 0L) > 2 && self.map(_(3)).distinct.size < self.size,
+        "exact duplicates of the query and tied distances")
+      for (nprobe <- Seq(2, nlist); k <- Seq(0, 1, 10, live + 50))
+        assertServedAll(idx, batch, k, nprobe, s"$name nprobe=$nprobe k=$k")
+    }
+  }
+
+  test("an Int query id column on a long-id index is served and keeps src_id an int") {
+    val idx = opened(() => IvfIndex.Index(built.centroids, built.postings))
+    val intIds = batch.withColumn("id", col("id").cast(IntegerType))
+    assertServedAll(idx, intIds, 10, 2, "int query ids")
+    assert(IvfIndex.searchAll(idx, intIds, "id", "embedding", 10, 2)
+      .schema("src_id").dataType == IntegerType)
+  }
+
+  test("searchAll over array<double> queries or an Int-id index falls back to the scan") {
+    import spark.implicits._
+    val idx = opened(() => IvfIndex.Index(built.centroids, built.postings))
+    val doubles = batch.withColumn("embedding", col("embedding").cast(ArrayType(DoubleType)))
+    def failure(f: => DataFrame): String =
+      scala.util.Try(f.collect()).failed.map(_.getMessage.replaceAll("#\\d+", ""))
+        .getOrElse("no failure")
+    assert(failure(IvfIndex.searchAll(idx, doubles, "id", "embedding", 10, 2)) ==
+      failure(IvfIndex.searchAllScan(idx, doubles, "id", "embedding", 10, 2)))
+
+    val intIds = IvfIndex.build(corpus.map { case (id, v) => (id.toInt, v) }.toDF("id", "embedding"),
+      "id", "embedding", nlist)
+    assert(intIds.serving.isEmpty)
+    val all = IvfIndex.searchAll(intIds, batch, "id", "embedding", 10, 2)
+    assert(all.queryExecution.executedPlan.toString.contains("Exchange"))
+    assert(ranked(all) == ranked(IvfIndex.searchAllScan(intIds, batch, "id", "embedding", 10, 2)))
+  }
+
+  test("served searchAll answers a repeated query id once per row; the scan pools them") {
+    import spark.implicits._
+    val idx = opened(() => IvfIndex.Index(built.centroids, built.postings))
+    val twice = Seq(7L -> q, 7L -> other).toDF("id", "embedding")
+    val served = IvfIndex.searchAll(idx, twice, "id", "embedding", 5, 2).collect()
+      .map(r => (r.getInt(3), r.getLong(1), r.getDouble(2))).toSeq
+    def one(v: Array[Float]) = IvfIndex.search(idx, v, 5, 2, Some(7L)).collect().toSeq
+      .zipWithIndex.map { case (r, i) => (i + 1, r.getLong(0), r.getDouble(1)) }
+    assert(served.sorted == (one(q) ++ one(other)).sorted)
+    assert(IvfIndex.searchAllScan(idx, twice, "id", "embedding", 5, 2).count() == 5)
+  }
+
+  test("served searchAll fails on a null or wrong-length query embedding, naming its src_id") {
+    val idx = opened(() => IvfIndex.Index(built.centroids, built.postings))
+    val schema = StructType(Seq(StructField("id", LongType), StructField("embedding", ArrayType(FloatType))))
+    Seq[(Array[Float], String)]((null, "null embedding"), (Array(1f, 2f), "2 dims")).foreach {
+      case (v, says) =>
+        val queries = spark.createDataFrame(
+          java.util.List.of(Row(qid, q), Row(4242L, v)), schema)
+        val e = intercept[IllegalArgumentException](
+          IvfIndex.searchAll(idx, queries, "id", "embedding", 10, 2).collect())
+        assert(e.getMessage.contains("src_id 4242") && e.getMessage.contains(says), e.getMessage)
+    }
+    Seq[() => Any](
+      () => IvfIndex.searchAll(idx, batch, "id", "embedding", -1, 2),
+      () => IvfIndex.searchAll(idx, batch, "id", "embedding", 10, 0)).foreach { call =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("must be >="), e.getMessage)
     }
   }
 
@@ -211,6 +317,21 @@ class ServingSpec extends SparkSpec {
         IvfIndex.searchShards(Seq(idx, idx), q, 10, 2).collect()
       }
       assert(probe.jobs("search").isEmpty)
+    } finally probe.close()
+  }
+
+  test("with the handle open, a served searchAll over local queries is 1 job, 1 stage, no shuffle") {
+    import spark.implicits._
+    val probe = new JobProbe(spark, "serving-spec-")
+    try {
+      val idx = opened(() => IvfIndex.Index(built.centroids, built.postings))
+      val queries = corpus.take(50).toDF("id", "embedding")
+      val rows = probe.in("searchAll")(
+        IvfIndex.searchAll(idx, queries, "id", "embedding", 10, 2).collect())
+      assert(rows.length == 50 * 10)
+      assert(probe.jobs("searchAll").size == 1)
+      assert(probe.stages("searchAll") == 1)
+      assert(probe.shuffleBytes("searchAll") == 0L)
     } finally probe.close()
   }
 
