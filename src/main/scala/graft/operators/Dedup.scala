@@ -488,7 +488,13 @@ object Dedup {
     *
     * Zero-token docs (zero embedding) are excluded from the graph —
     * they'd all be "identical" at distance 0 — and come back as their
-    * own canonical singletons. */
+    * own canonical singletons.
+    *
+    * Document `id`s are expected unique; they are passed to searchAll
+    * as its query ids. A repeated id is not checked: its rows are
+    * answered one ranking each below the serving bound and share one
+    * pooled ranking above it (see [[IvfIndex.searchAll]]), so its edges
+    * depend on the corpus size. */
   def docDedup(corpus: DataFrame, eps: Double = 0.3, k: Int = 10,
                nlist: Int = 8, nprobe: Int = 2,
                dim: Int = graft.functions.Embedder.DefaultDim): DataFrame = {

@@ -273,7 +273,7 @@ object IvfIndex {
     val probed = probeLists(index, q, nprobe)
     index.serving match {
       case Some(h) => IvfServing.frame(index.postings.sparkSession,
-        h.lists.hits(q, probed, cut, excludeId, withVecs), withVecs)
+        h.hits(q, probed, cut, excludeId, withVecs), withVecs)
       case None => scanProbed(index.postings, probed, l2sq(col("embedding"), typedlit(q)),
         "dist", cut, excludeId = excludeId, keep = if (withVecs) Seq("embedding") else Nil)
     }
@@ -341,10 +341,12 @@ object IvfIndex {
     * each row against the handle's broadcast lists, exactly as
     * `search(index, emb, k, nprobe, Some(id))` would. A row whose
     * embedding is null or not of the centroid dimension fails the
-    * action with `IllegalArgumentException` naming its `src_id`; each
+    * action with `IllegalArgumentException` naming its `src_id`. Each
     * row is answered on its own, so a repeated id gets one ranking per
-    * row. Otherwise it is [[searchAllScan]]. `k < 0` and `nprobe < 1`
-    * fail with `IllegalArgumentException`. */
+    * row there, while [[searchAllScan]] (every other case) pools the
+    * candidates of a repeated id into one ranking: the two paths agree
+    * only on unique ids, which is why they are expected. `k < 0` and
+    * `nprobe < 1` fail with `IllegalArgumentException`. */
   def searchAll(index: Index, queries: DataFrame, idCol: String,
                 embCol: String, k: Int, nprobe: Int): DataFrame = {
     require(k >= 0, s"k must be >= 0, got $k")
@@ -894,7 +896,7 @@ object IvfIndex {
     val handles = indexes.flatMap(_.serving)
     if (handles.size == indexes.size) {
       val hits = indexes.zip(handles).flatMap { case (ix, h) =>
-        h.lists.hits(q, probeLists(ix, q, nprobe), cut, excludeId, withVecs = false) }
+        h.hits(q, probeLists(ix, q, nprobe), cut, excludeId, withVecs = false) }
       IvfServing.frame(indexes.head.postings.sparkSession,
         IvfServing.merge(hits, cut), withVecs = false)
     } else

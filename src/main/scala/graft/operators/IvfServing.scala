@@ -18,12 +18,26 @@ private[graft] final class PackedList(val ids: Array[Long], val vecs: Array[Floa
   * for it (`searchAndReconstruct`), else null. */
 private[graft] final case class Hit(id: Long, dist: Double, vec: Array[Float])
 
-/** What a served search reads: the centroid matrix (as
-  * [[IvfIndex.Index.centroidArrays]]) and the postings packed per list.
-  * The driver scores it directly; a served [[IvfIndex.searchAll]] task
-  * reads it from the handle's broadcast. */
-private[graft] final class ServedLists(val dim: Int, val centroids: Array[(Int, Array[Float])],
-                                       lists: Map[Int, PackedList]) extends Serializable {
+/** The serving handle of one [[IvfIndex.Index]]: its centroid matrix
+  * (as [[IvfIndex.Index.centroidArrays]]) and its postings packed per
+  * list in the driver heap, read once from the index's own `postings`
+  * frame, so the handle answers exactly as that frame would (the same
+  * file listing for a loaded index, the tombstone anti-join of
+  * [[IvfIndex.loadLive]] already applied). A single-query search scores
+  * the probed lists against it and runs no Spark job; a batch
+  * [[IvfIndex.searchAll]] scores each query row in a narrow map against
+  * a broadcast of this handle, made once and freed with it by Spark's
+  * context cleaner.
+  *
+  * Distances are accumulated in double over `(double)v_i − (double)q_i`,
+  * the loop of [[graft.functions.L2Sq]], so every distance and every
+  * `(dist, id)` rank is bit-identical to the `l2sq` DataFrame scan. */
+private[graft] final class IvfServing private (@transient private val sc: SparkContext,
+                                               val dim: Int,
+                                               val centroids: Array[(Int, Array[Float])],
+                                               lists: Map[Int, PackedList]) extends Serializable {
+
+  @transient private lazy val shipped: Broadcast[IvfServing] = sc.broadcast(this)
 
   /** The ranked hits of `q` over the `probed` lists, cut by `cut`,
     * leaving out `excludeId`. */
@@ -31,24 +45,6 @@ private[graft] final class ServedLists(val dim: Int, val centroids: Array[(Int, 
            withVecs: Boolean): Seq[Hit] =
     IvfServing.merge(probed.flatMap(lists.get)
       .flatMap(IvfServing.scan(_, dim, q, cut, excludeId, withVecs)), cut)
-}
-
-/** The serving handle of one [[IvfIndex.Index]]: its postings packed per
-  * list in the driver heap, read once from the index's own `postings`
-  * frame, so the handle answers exactly as that frame would (the same
-  * file listing for a loaded index, the tombstone anti-join of
-  * [[IvfIndex.loadLive]] already applied). A single-query search scores
-  * the probed lists against it and runs no Spark job; a batch
-  * [[IvfIndex.searchAll]] scores each query row in a narrow map against
-  * a broadcast of the same lists, made once per handle and freed with
-  * it by Spark's context cleaner.
-  *
-  * Distances are accumulated in double over `(double)v_i − (double)q_i`,
-  * the loop of [[graft.functions.L2Sq]], so every distance and every
-  * `(dist, id)` rank is bit-identical to the `l2sq` DataFrame scan. */
-private[graft] final class IvfServing private (sc: SparkContext, val lists: ServedLists) {
-
-  private lazy val shipped: Broadcast[ServedLists] = sc.broadcast(lists)
 
   /** [[IvfIndex.searchAll]] over `queries` (`src_id` an int or a long,
     * `src_emb` an array of floats): each row is answered as
@@ -103,8 +99,8 @@ private[graft] object IvfServing {
             .as[(Int, Long, Array[Float])].rdd
             .mapPartitions(it => pack(it.filter(r => lids.contains(r._1)), dim).iterator)
             .collect())
-        Some(new IvfServing(sc, new ServedLists(dim, cents,
-          packs.groupBy(_._1).map { case (lid, ps) => lid -> concat(ps.map(_._2).toSeq) })))
+        Some(new IvfServing(sc, dim, cents,
+          packs.groupBy(_._1).map { case (lid, ps) => lid -> concat(ps.map(_._2).toSeq) }))
       }
     }
   }
@@ -141,20 +137,20 @@ private[graft] object IvfServing {
     * neighbours (the scan's `src_id <> dst_id` is never true for it); a
     * null embedding, or one not of the centroid dimension, fails with
     * [[BadInput]] naming the row's `src_id`. */
-  private def answerAll(queries: DataFrame, shipped: Broadcast[ServedLists], cut: TopK,
+  private def answerAll(queries: DataFrame, shipped: Broadcast[IvfServing], cut: TopK,
                         nprobe: Int, schema: StructType): DataFrame =
     queries.mapPartitions { rows =>
-      val lists = shipped.value
+      val h = shipped.value
       rows.filterNot(_.isNullAt(0)).flatMap { r =>
         val srcId = r.get(0)
         val id = r.getAs[Number](0).longValue
         if (r.isNullAt(1)) throw new BadInput(s"query src_id $id has a null embedding")
         val q = r.getSeq[Float](1).toArray
-        if (lists.centroids.nonEmpty && q.length != lists.dim)
+        if (h.centroids.nonEmpty && q.length != h.dim)
           throw new BadInput(
-            s"query src_id $id has ${q.length} dims but the centroids have ${lists.dim}")
-        val probed = IvfIndex.probeCentroids(lists.centroids, q, nprobe)
-        lists.hits(q, probed, cut, Some(id), withVecs = false).iterator.zipWithIndex
+            s"query src_id $id has ${q.length} dims but the centroids have ${h.dim}")
+        val probed = IvfIndex.probeCentroids(h.centroids, q, nprobe)
+        h.hits(q, probed, cut, Some(id), withVecs = false).iterator.zipWithIndex
           .map { case (h, i) => Row(srcId, h.id, h.dist, i + 1) }
       }
     }(Encoders.row(schema))

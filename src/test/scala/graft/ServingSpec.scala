@@ -199,7 +199,12 @@ class ServingSpec extends SparkSpec {
     def one(v: Array[Float]) = IvfIndex.search(idx, v, 5, 2, Some(7L)).collect().toSeq
       .zipWithIndex.map { case (r, i) => (i + 1, r.getLong(0), r.getDouble(1)) }
     assert(served.sorted == (one(q) ++ one(other)).sorted)
-    assert(IvfIndex.searchAllScan(idx, twice, "id", "embedding", 5, 2).count() == 5)
+    // the scan ranks the candidates of both rows together and keeps 5
+    val pooled = (one(q) ++ one(other)).sortBy { case (_, id, d) => (d, id) }.take(5)
+      .zipWithIndex.map { case ((_, id, d), i) => (i + 1, id, d) }
+    val scanned = IvfIndex.searchAllScan(idx, twice, "id", "embedding", 5, 2).collect()
+      .map(r => (r.getInt(3), r.getLong(1), r.getDouble(2))).toSeq
+    assert(scanned.sorted == pooled.sorted)
   }
 
   test("served searchAll fails on a null or wrong-length query embedding, naming its src_id") {
