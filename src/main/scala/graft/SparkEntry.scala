@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Entry contract — see SURVEY.md §7.
   *
   * Every implemented operator from SURVEY.md §2 is registered in
   * [[queries]]; every SQL-expressible one has a DuckDB oracle in

@@ -116,8 +116,8 @@ object VectorDecade {
   private def fmt(d: Double): String = f"$d%.3f"
 
   def main(args: Array[String]): Unit = {
-    val dir = args.lift(0).getOrElse("/root/repo/fixtures/vec500k")
-    val out = args.lift(1).getOrElse("/root/repo/VECTOR_DECADE_r14.json")
+    val dir = args.lift(0).getOrElse("fixtures/vec500k")
+    val out = args.lift(1).getOrElse("VECTOR_DECADE_r14.json")
     val n = args.lift(2).map(_.toLong).getOrElse(500000L)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -399,11 +399,11 @@ object VectorDecadeR15 {
   private def fmt(d: Double): String = f"$d%.3f"
 
   def main(args: Array[String]): Unit = {
-    val out = args.lift(0).getOrElse("/root/repo/VECTOR_DECADE_r15.json")
+    val out = args.lift(0).getOrElse("VECTOR_DECADE_r15.json")
     val n = args.lift(1).map(_.toLong).getOrElse(500000L)
     val nD384 = args.lift(2).map(_.toLong).getOrElse(100000L)
-    val dir64 = "/root/repo/fixtures/vec500k"
-    val dir384 = "/root/repo/fixtures/vec100k_d384"
+    val dir64 = "fixtures/vec500k"
+    val dir384 = "fixtures/vec100k_d384"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -444,7 +444,7 @@ object VectorDecadeR15 {
     }
     put("graph_build_500k", Map("build_s" -> tBuild, "n_nodes" -> total.toDouble))
 
-    val graphDir = "/root/repo/fixtures/vec500k/graph-ann"
+    val graphDir = s"$dir64/graph-ann"
     graft.operators.BatchFs.deleteRecursively(java.nio.file.Paths.get(graphDir))
     val (_, tSave) = time(GraphAnn.saveGraph(graph, graphDir, nBuckets = 512))
     graph.unpersist(blocking = false)

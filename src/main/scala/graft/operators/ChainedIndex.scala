@@ -266,13 +266,15 @@ object ChainedIndex {
     JvmCaches.map[(String, Int, Int, Int, Int), String]()
 
   /** Save-once-per-session handle (the [[Pq.persistedSearchPq]]
-    * directory discipline), keyed on the full parameter tuple. */
+    * directory discipline) in the [[graft.StateDir]] of the canonical
+    * sfDir and the full parameter tuple, so only that input reuses it. */
   def persistedFor(spark: SparkSession, sfDir: String, dOut: Int = 24,
                    nlist: Int = 4, m: Int = 8, k: Int = 16): Persisted = {
     val dir = persistedCache.getOrElseUpdate((sfDir, dOut, nlist, m, k), {
       // "-opq" suffix: r13 composed the rotation into the transform, so
       // a pre-rotation artifact directory must not be reused
-      val d = s"/root/repo/target/chained-index/${new java.io.File(sfDir).getName}-d$dOut-nlist$nlist-m$m-k$k-opq"
+      val d = graft.StateDir.of("chained-index", sfDir,
+        s"d$dOut", s"nlist$nlist", s"m$m", s"k$k", "opq")
       // a complete on-disk artifact is reused as-is — the whole point
       // of the lifecycle is that a cold session loads WITHOUT a
       // training pass (the registered audit's results_match_ok flag

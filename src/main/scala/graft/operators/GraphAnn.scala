@@ -843,8 +843,7 @@ object GraphAnn {
     * serving shape the 100 TB design claims. */
   def persistedGraphFor(spark: SparkSession, sfDir: String): GraphIndex =
     persistedCache.getOrElseUpdate(spark, sfDir) {
-      val dir =
-        s"/root/repo/target/graph-ann/${new java.io.File(sfDir).getName}"
+      val dir = graft.StateDir.of("graph-ann", sfDir)
       saveGraph(forEmbeddings(spark, sfDir), dir)
       loadGraph(spark, dir)
     }
@@ -859,8 +858,7 @@ object GraphAnn {
   def appendedGraphFor(spark: SparkSession, sfDir: String,
                        k: Int = 10): (GraphIndex, Boolean) =
     appendedCache.getOrElseUpdate(spark, sfDir) {
-      val dir =
-        s"/root/repo/target/graph-append/${new java.io.File(sfDir).getName}"
+      val dir = graft.StateDir.of("graph-append", sfDir)
       BatchFs.deleteRecursively(java.nio.file.Paths.get(dir))
       BatchFs.deleteRecursively(java.nio.file.Paths.get(s"$dir-repaired"))
       val emb = Tables.embeddings(spark, sfDir)

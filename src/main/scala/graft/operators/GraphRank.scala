@@ -328,9 +328,7 @@ object GraphRank {
     * nothing. */
   private[graft] def persistedGraphDir(spark: SparkSession, sfDir: String): String =
     persistedDirCache.getOrElseUpdate(sfDir, {
-      val canon = new java.io.File(sfDir).getCanonicalPath
-      val d = "/root/repo/target/neardup-graph/" +
-        s"${new java.io.File(sfDir).getName}-${(canon.hashCode.toLong & 0xffffffffL).toHexString}"
+      val d = graft.StateDir.of("neardup-graph", sfDir)
       val corpus = Ingest.corpusFromDocuments(spark, sfDir)
       // Reuse the session-cached full-corpus signature frame, filtered
       // per half: signatures are per-row deterministic, so the filter

@@ -902,7 +902,7 @@ object IndexAudits {
       val split = n / 2
       // full-corpus models (training set ⊇ both halves), half codes
       val src = ChainedIndex.persistedFor(spark, sfDir, dOut, nlist)
-      val dir = s"/root/repo/target/chained-append/${new java.io.File(sfDir).getName}-d$dOut-nlist$nlist"
+      val dir = graft.StateDir.of("chained-append", sfDir, s"d$dOut", s"nlist$nlist")
       BatchFs.deleteRecursively(Paths.get(dir))
       val p = {
         ChainedIndex.save(spark, sfDir, dir, dOut, nlist)

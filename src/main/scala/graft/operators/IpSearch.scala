@@ -85,7 +85,7 @@ object IpSearch {
   def persistedForEmbeddingsIp(spark: SparkSession, sfDir: String,
                                nlist: Int): IvfIndex.Index =
     persistedCache.getOrElseUpdate(spark, (sfDir, nlist)) {
-      val dir = s"/root/repo/target/ivf-ip-index/${new java.io.File(sfDir).getName}-nlist$nlist"
+      val dir = graft.StateDir.of("ivf-ip-index", sfDir, s"nlist$nlist")
       IvfIndex.save(forEmbeddingsIp(spark, sfDir, nlist), dir)
       IvfIndex.load(spark, dir)
     }

@@ -579,26 +579,6 @@ object IvfIndex {
   final case class MaintenanceReport(retrained: Boolean, maxShare: Double,
                                      threshold: Double, nlist: Int)
 
-  /** The §7.5 maintenance loop closed end-to-end: measure drift from
-    * [[listStats]], decide, and either leave the append-only index as
-    * is or train-and-promote a fresh generation.
-    *
-    * Decision rule (the documented policy): appends assign against
-    * FROZEN centroids, so distribution drift shows up as list-size
-    * skew; when the largest list's share exceeds
-    * `maxShareFactor / nlist` (a few multiples of the balanced share),
-    * quantization quality has degraded enough that probing that list
-    * dominates search cost, and a retrain re-balances. Below the
-    * threshold a retrain would churn the whole index for no recall
-    * benefit — the append-only path stands.
-    *
-    * Promotion is the Upsert swap posture: the new generation is fully
-    * written to a sibling staging dir, the old directory is moved
-    * aside, the new one moved in, the old deleted — single-writer
-    * maintenance windows assumed; in-flight readers of the old
-    * generation on an object store would instead get a manifest
-    * pointer flip. Driver state stays bounded: the decision reads ONE
-    * aggregate row (max share) and the centroid matrix (≤ nlist). */
   /** Parquet files under `dir`/postings split into (committed,
     * uncommitted-relative-paths): a `b<tag>-` file whose marker is
     * absent belongs to a crashed, not-yet-replayed batch. */
@@ -659,6 +639,26 @@ object IvfIndex {
     }
   }
 
+  /** The §7.5 maintenance loop closed end-to-end: measure drift from
+    * [[listStats]], decide, and either leave the append-only index as
+    * is or train-and-promote a fresh generation.
+    *
+    * Decision rule (the documented policy): appends assign against
+    * FROZEN centroids, so distribution drift shows up as list-size
+    * skew; when the largest list's share exceeds
+    * `maxShareFactor / nlist` (a few multiples of the balanced share),
+    * quantization quality has degraded enough that probing that list
+    * dominates search cost, and a retrain re-balances. Below the
+    * threshold a retrain would churn the whole index for no recall
+    * benefit — the append-only path stands.
+    *
+    * Promotion is the Upsert swap posture: the new generation is fully
+    * written to a sibling staging dir, the old directory is moved
+    * aside, the new one moved in, the old deleted — single-writer
+    * maintenance windows assumed; in-flight readers of the old
+    * generation on an object store would instead get a manifest
+    * pointer flip. Driver state stays bounded: the decision reads ONE
+    * aggregate row (max share) and the centroid matrix (≤ nlist). */
   def maintainIndex(spark: SparkSession, dir: String,
                     maxShareFactor: Double = 3.0, seed: Long = 42L,
                     maxIter: Int = 20): MaintenanceReport = {
@@ -839,8 +839,8 @@ object IvfIndex {
   // half of the sf embeddings, append the second half against the
   // FROZEN centroids, report per-list stats of the result. Memoized
   // per sfDir — parquet append is not idempotent, so Verify + the
-  // bench's three reps must share one generation; the directory is
-  // recreated fresh per JVM.
+  // bench's three reps must share one generation; its StateDir (keyed
+  // on the canonical sfDir and nlist) is recreated fresh per JVM.
   private val appendStatsCache = JvmCaches.sessionMap[String, DataFrame]()
 
   def appendHalfStats(spark: SparkSession, sfDir: String,
@@ -848,7 +848,7 @@ object IvfIndex {
     appendStatsCache.getOrElseUpdate(spark, sfDir) {
       val emb = graft.Tables.embeddings(spark, sfDir)
       val split = emb.count() / 2
-      val dir = s"/root/repo/target/ivf-append/${new java.io.File(sfDir).getName}-nlist$nlist"
+      val dir = graft.StateDir.of("ivf-append", sfDir, s"nlist$nlist")
       deleteRecursively(dir)
       val idx = build(emb.filter(col("vec_id") < split),
         "vec_id", "embedding", nlist)
@@ -1011,9 +1011,8 @@ object IvfIndex {
   def mergedForEmbeddings(spark: SparkSession, sfDir: String,
                           nlist: Int = 4): Index =
     mergeCache.getOrElseUpdate(spark, sfDir) {
-      val base = s"/root/repo/target/ivf-merge/${new java.io.File(sfDir).getName}"
-      val dirA = s"$base-even"
-      val dirB = s"$base-odd"
+      val dirA = graft.StateDir.of("ivf-merge", sfDir, "even")
+      val dirB = graft.StateDir.of("ivf-merge", sfDir, "odd")
       deleteRecursively(dirA); deleteRecursively(dirB)
       val full = build(graft.Tables.embeddings(spark, sfDir),
         "vec_id", "embedding", nlist)
@@ -1037,9 +1036,8 @@ object IvfIndex {
   def removedForEmbeddings(spark: SparkSession, sfDir: String,
                            compacted: Boolean, nlist: Int = 4): Index =
     removeCache.getOrElseUpdate(spark, (sfDir, compacted)) {
-      val tag = if (compacted) "compacted" else "live"
-      val dir =
-        s"/root/repo/target/ivf-remove/${new java.io.File(sfDir).getName}-$tag"
+      val dir = graft.StateDir.of("ivf-remove", sfDir,
+        if (compacted) "compacted" else "live")
       deleteRecursively(dir)
       val emb = graft.Tables.embeddings(spark, sfDir)
       val idx = build(emb, "vec_id", "embedding", nlist)
@@ -1061,7 +1059,7 @@ object IvfIndex {
     * files. Unlike [[forEmbeddings]] the postings frame is not cached. */
   def persistedForEmbeddings(spark: SparkSession, sfDir: String, nlist: Int): Index =
     persistedCache.getOrElseUpdate(spark, (sfDir, nlist)) {
-      val dir = s"/root/repo/target/ivf-index/${new java.io.File(sfDir).getName}-nlist$nlist"
+      val dir = graft.StateDir.of("ivf-index", sfDir, s"nlist$nlist")
       save(forEmbeddings(spark, sfDir, nlist), dir)
       load(spark, dir)
     }

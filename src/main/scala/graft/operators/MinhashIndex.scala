@@ -210,7 +210,7 @@ object MinhashIndex {
   def minhashProbeFor(spark: SparkSession, sfDir: String): DataFrame = {
     val corpus = Ingest.corpusFromDocuments(spark, sfDir)
     val dir = indexCache.getOrElseUpdate(sfDir, {
-      val d = "/root/repo/target/minhash-index/" + new java.io.File(sfDir).getName
+      val d = graft.StateDir.of("minhash-index", sfDir)
       save(corpus.filter(col("id") % 2 === 0), d)
       d
     })

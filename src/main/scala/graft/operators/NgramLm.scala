@@ -273,7 +273,7 @@ object NgramLm {
   def persistedScore(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = tokenized(Ingest.corpusFromDocuments(spark, sfDir))
     val dir = modelCache.getOrElseUpdate(sfDir, {
-      val d = "/root/repo/target/lm-model/" + new java.io.File(sfDir).getName
+      val d = graft.StateDir.of("lm-model", sfDir)
       // three count writes scan the corpus; cache it for the build
       val cached = docs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try saveModel(train(cached), d)

@@ -431,17 +431,13 @@ object Pca {
   /** The two-wave persisted model over the embeddings table (waves =
     * vec_id parity), memoized per (sfDir, dOut) — the `pca_persisted`
     * audit's subject. Replays are exercised on every build: wave 0 is
-    * re-appended after commit and must change nothing. */
+    * re-appended after commit and must change nothing. The log's
+    * [[graft.StateDir]] is keyed on the canonical sfDir path. */
   private val persistedCache = JvmCaches.map[(String, Int), (Model, Model)]()
   def persistedModelFor(spark: SparkSession, sfDir: String,
                         dOut: Int = 24): (Model, Model) =
     persistedCache.getOrElseUpdate((sfDir, dOut), {
-      // Keyed on the FULL canonical path (hashed), not the basename:
-      // two sfDirs sharing a basename must not share a log. String
-      // hashCode is spec-fixed, so the key is stable across JVMs.
-      val canon = new java.io.File(sfDir).getCanonicalPath
-      val dir = s"/root/repo/target/pca-moments/" +
-        s"${new java.io.File(sfDir).getName}-${(canon.hashCode.toLong & 0xffffffffL).toHexString}"
+      val dir = graft.StateDir.of("pca-moments", sfDir)
       val emb = Tables.embeddings(spark, sfDir)
       def appendBoth(): Unit = {
         appendMomentsBatch(spark, dir, emb.filter(pmod(col("vec_id"), lit(2)) === 0), 0L)
@@ -466,15 +462,4 @@ object Pca {
       require(replayed == 0L, "pca: committed wave replay must be a no-op")
       (m1, trainFromLog(spark, dir, dOut))
     })
-
-  /** Recall@k of the PCA re-rank path against exact L2 — the quality
-    * probe a user runs before turning the pre-transform on. */
-  def pcaRecall(spark: SparkSession, sfDir: String, queryId: Long = 0L,
-                k: Int = 10, rerank: Int = 200, dOut: Int = 24): Double = {
-    val exact = VectorSearchOps.knnExactL2(spark, sfDir, queryId, k)
-      .collect().map(_.getLong(0)).toSet
-    val approx = knnPcaRerank(spark, sfDir, queryId, k, rerank, dOut)
-      .collect().map(_.getLong(0)).toSet
-    exact.intersect(approx).size.toDouble / k
-  }
 }

@@ -416,8 +416,8 @@ object Pq {
                         m: Int = 8, k: Int = 16,
                         residual: Boolean = true): DataFrame = {
     val dir = persistedCache.getOrElseUpdate((sfDir, nlist, m, k, residual), {
-      val suffix = if (residual) "-res" else ""
-      val d = s"/root/repo/target/pq-postings/${new java.io.File(sfDir).getName}-nlist$nlist-m$m-k$k$suffix"
+      val params = Seq(s"nlist$nlist", s"m$m", s"k$k") ++ Option.when(residual)("res")
+      val d = graft.StateDir.of("pq-postings", sfDir, params: _*)
       savePostings(spark, sfDir, d, nlist, m, k, residual)
       d
     })

@@ -326,8 +326,7 @@ object ScorecardIndex {
 
   private[graft] def admittedIndexFor(spark: SparkSession, sfDir: String): String =
     admittedIndexCache.getOrElseUpdate(sfDir, {
-      val d = "/root/repo/target/scorecard-index-admitted/" +
-        new java.io.File(sfDir).getName
+      val d = graft.StateDir.of("scorecard-index-admitted", sfDir)
       build(spark, d, Ingest.corpusFromDocuments(spark, sfDir)
         .filter(pmod(col("id"), lit(5L)) =!= 0L))
       d
@@ -387,7 +386,7 @@ object ScorecardIndex {
     * the registered query's median measures WAVE scoring only). */
   private[graft] def indexFor(spark: SparkSession, sfDir: String): String =
     indexCache.getOrElseUpdate(sfDir, {
-      val d = "/root/repo/target/scorecard-index/" + new java.io.File(sfDir).getName
+      val d = graft.StateDir.of("scorecard-index", sfDir)
       build(spark, d, Ingest.corpusFromDocuments(spark, sfDir))
       d
     })

@@ -380,7 +380,7 @@ object TextSearch {
 
   def persistedTermIndexFor(spark: SparkSession, sfDir: String): TermIndex = {
     val dir = termIndexCache.getOrElseUpdate(sfDir, {
-      val d = "/root/repo/target/term-index/" + new java.io.File(sfDir).getName
+      val d = graft.StateDir.of("term-index", sfDir)
       saveTermIndex(
         buildTermIndex(Ingest.corpusFromDocuments(spark, sfDir)), d)
       d

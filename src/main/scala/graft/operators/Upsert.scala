@@ -134,8 +134,7 @@ object Upsert {
 
   def upsertTableFor(spark: SparkSession, sfDir: String): String =
     tableCache.getOrElseUpdate(spark, sfDir) {
-      val dir =
-        s"/root/repo/target/fixtures/upsert-${new java.io.File(sfDir).getName}"
+      val dir = graft.StateDir.of("fixtures", sfDir, "upsert")
       val corpus = graft.sources.Ingest.corpusFromDocuments(spark, sfDir)
       writeBase(corpus, dir, "id", 16)
       val updates = corpus

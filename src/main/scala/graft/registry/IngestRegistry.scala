@@ -89,7 +89,7 @@ private[graft] object IngestRegistry {
     // --- ingest surface (S1/S2/S5, app.py:199-223, 313-319) ---
     "ingest_csv" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
-      val dir = s"/root/repo/target/fixtures/csv-${new java.io.File(d).getName}"
+      val dir = StateDir.of("fixtures", d, "csv")
       // fixture rows must land in id order (the re-ingest assigns
       // positional ids the oracle restates); the corpus source itself
       // is unordered
@@ -106,7 +106,7 @@ private[graft] object IngestRegistry {
     // ingest_csv)
     "ingest_jsonl" -> ((s, d) => {
       import org.apache.spark.sql.functions.{col, length}
-      val dir = s"/root/repo/target/fixtures/jsonl-${new java.io.File(d).getName}"
+      val dir = StateDir.of("fixtures", d, "jsonl")
       graft.Tables.documents(s, d)
         .select(col("doc_id"), col("text"), col("lang"), col("source"))
         .coalesce(1).write.mode("overwrite").json(dir)
@@ -119,7 +119,7 @@ private[graft] object IngestRegistry {
     // jsonl one; the oracle restates the semantics over documents)
     "ingest_orc" -> ((s, d) => {
       import org.apache.spark.sql.functions.{col, length}
-      val dir = s"/root/repo/target/fixtures/orc-${new java.io.File(d).getName}"
+      val dir = StateDir.of("fixtures", d, "orc")
       graft.Tables.documents(s, d)
         .select(col("doc_id"), col("text"), col("lang"), col("source"))
         .coalesce(1).write.mode("overwrite").orc(dir)

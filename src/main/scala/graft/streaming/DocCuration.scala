@@ -33,7 +33,7 @@ object DocCuration {
     * zone). */
   def readDocuments(spark: SparkSession, sfDir: String): DataFrame = {
     val stage = java.nio.file.Paths.get(
-      s"/root/repo/target/stream-src-docs/${new java.io.File(sfDir).getName}")
+      graft.StateDir.of("stream-src-docs", sfDir))
     java.nio.file.Files.createDirectories(stage)
     // absolute + dangling-link repair, see EventsStreaming.stageLink
     EventsStreaming.stageLink(stage.resolve("documents.parquet"),

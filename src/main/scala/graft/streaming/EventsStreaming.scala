@@ -50,8 +50,7 @@ object EventsStreaming {
   }
 
   def readEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    val stage = java.nio.file.Paths.get(
-      s"/root/repo/target/stream-src/${new java.io.File(sfDir).getName}")
+    val stage = java.nio.file.Paths.get(graft.StateDir.of("stream-src", sfDir))
     java.nio.file.Files.createDirectories(stage)
     // Absolute target (a relative sfDir would stage a dangling link),
     // and re-link when the existing entry doesn't resolve: exists()

@@ -94,7 +94,7 @@ class GraphAnnSpec extends SparkSpec {
   }
 
   test("save -> load -> bucket-pruned search round trip is identical") {
-    val dir = s"/root/repo/target/graph-ann-test/${System.nanoTime()}"
+    val dir = s"${tmpDir("graph-ann-test")}/graph"
     GraphAnn.saveGraph(graph, dir)
     val loaded = GraphAnn.loadGraph(spark, dir)
     assert(loaded.nBuckets ==
@@ -112,7 +112,7 @@ class GraphAnnSpec extends SparkSpec {
 
   test("loadGraph on a missing directory fails like the index loaders") {
     intercept[java.io.FileNotFoundException](
-      GraphAnn.loadGraph(spark, "/root/repo/target/graph-ann-test/nope"))
+      GraphAnn.loadGraph(spark, s"${tmpDir("graph-ann-test")}/nope"))
   }
 
   test("LSH init keeps NN-descent alive on clustered high-dim geometry") {

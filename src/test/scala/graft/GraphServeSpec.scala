@@ -37,8 +37,7 @@ class GraphServeSpec extends SparkSpec {
     // force the lazy persisted build FIRST — on a clean target/ the
     // adjacency directory does not exist until persistedGraphFor runs
     assert(idx.adjacency.columns.toSet == Set("src", "dst", "dist", "bucket"))
-    val dirs = new java.io.File(
-      s"/root/repo/target/graph-ann/${new java.io.File(sfSmall).getName}/adjacency")
+    val dirs = new java.io.File(s"${StateDir.of("graph-ann", sfSmall)}/adjacency")
       .listFiles()
     assert(dirs.exists(_.getName.startsWith("bucket=")),
       "expected bucket= partition directories")

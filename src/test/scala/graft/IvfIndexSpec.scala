@@ -145,7 +145,7 @@ class IvfIndexSpec extends SparkSpec {
 
   test("missing index directory fails like the reference's FileNotFoundError") {
     intercept[java.io.FileNotFoundException] {
-      IvfIndex.load(spark, "/root/repo/target/does-not-exist")
+      IvfIndex.load(spark, s"${tmpDir("ivf-missing")}/does-not-exist")
     }
   }
 

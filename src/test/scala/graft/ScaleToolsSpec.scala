@@ -58,8 +58,10 @@ class ScaleToolsSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS orders_bucketed_b")
     // a previously crashed run can leave the managed location behind
     // without a catalog entry; clear it so saveAsTable can create
+    val warehouse = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath
     Seq("orders_bucketed_a", "orders_bucketed_b").foreach { t =>
-      val d = new java.io.File(s"/root/repo/target/spark-warehouse/$t")
+      val d = new java.io.File(s"$warehouse/$t")
       if (d.exists()) {
         def rm(f: java.io.File): Unit = {
           Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit

@@ -13,7 +13,7 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/spark-warehouse")
+      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -27,7 +27,7 @@ trait SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String = {
     val d = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), prefix)
+      java.nio.file.Paths.get("target").toAbsolutePath, prefix)
     d.toFile.deleteOnExit()
     d.toString
   }

@@ -280,7 +280,7 @@ class StreamingSpec extends SparkSpec {
     Files.copy(Paths.get(s"$sfSmall/events.parquet"),
       srcDir.resolve("events.parquet"),
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val stage = Paths.get(s"/root/repo/target/stream-src/$name")
+    val stage = Paths.get(StateDir.of("stream-src", s"target/$name"))
     Files.createDirectories(stage)
     val link = stage.resolve("events.parquet")
     Files.deleteIfExists(link)

@@ -249,7 +249,7 @@ class TextSearchSpec extends SparkSpec {
 
   test("persisted term index: missing directory fails like the reference") {
     intercept[java.io.FileNotFoundException] {
-      TextSearch.loadTermIndex(spark, "/root/repo/target/nonexistent-term-index")
+      TextSearch.loadTermIndex(spark, s"${tmpDir("term-index")}/nonexistent")
     }
   }
 
